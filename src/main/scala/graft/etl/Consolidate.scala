@@ -47,132 +47,171 @@ object Consolidate {
     *     documented divergence from the reference's sequential greedy,
     *     which would hand the loser its next-best SG);
     *   - matched ∪ unmatched-SG ∪ unmatched-DICE, column-merged with
-    *     SG-priority coalesce;
+    *     SG-priority coalesce (NULL-only; [[consolidateGreedy]] has the
+    *     reference's Python-`or` instead);
     *   - drop days < `today` (FL2, parameterized for determinism);
     *   - sort by (day, lower(name)) (O1).
     *
-    * Scale shape: token-explode → equi-join on (day, token) → count
-    * group-by, i.e. a classic similarity-join prefilter. No cartesian
-    * anywhere; AQE handles day/token skew; the two window ranks
-    * partition by dc_id / sg_id so they shuffle by key, not globally.
+    * Scale shape: matching never crosses a day (`sg_by_day`,
+    * `consolidate_events.py:99`), so both sides are projected once,
+    * filtered to dated rows on days >= `today` before the shuffle, and
+    * cogrouped on the day column — one hash exchange per side, then the
+    * two-rank rule runs per day in [[rankMatch]]. A per-day token → SG
+    * index scores only the pairs sharing a token, the same pairs a
+    * (day, token) equi-join would materialize. The day is the unit of
+    * parallelism and memory, the bound [[consolidateGreedy]] and the
+    * reference's in-memory dict already assume.
     *
-    * PRECONDITION: `event_id_provider` is unique per side (the
-    * reference data model's provider key, SURVEY §1.2). Duplicate ids
-    * would merge token overlaps across their rows and fan out the
-    * matched join. The returned frame holds MEMORY_AND_DISK persists
-    * on id-sized intermediates; in a long-lived session the caller
-    * should clearCache (or unpersist) between runs.
+    * Each row is matched on its own, whatever its `event_id_provider`.
+    * PRECONDITION: both order columns are non-null and castable to long.
     */
   def consolidate(sg: DataFrame, dc: DataFrame, today: String,
       sgOrder: Column, dcOrder: Column): DataFrame = {
-    val sgP = sg
-      .withColumn("sg_ord", sgOrder)
-      .filter(col("event_datetime_local").isNotNull)
-      .select(
-        col("event_id_provider").as("sg_id"),
-        dayStr(col("event_datetime_local")).as("day"),
-        artistTokens(col("artist_name"), col("event_name")).as("toks"),
-        col("event_name").as("sg_name"),
-        col("artist_name").as("sg_artist"),
-        col("venue_name").as("sg_venue"),
-        col("city").as("sg_city"),
-        col("tickets_sold_total").as("sg_tickets"),
-        col("sg_ord"))
-      // four consumers (token explode, score join, matched join, rest
-      // anti-join) would each replay the regex-heavy artistTokens
-      // projection; the frame is id-sized, so cache it once
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    val dcP = dc
-      .withColumn("dc_ord", dcOrder)
-      .filter(col("event_datetime_local").isNotNull)
-      .select(
-        col("event_id_provider").as("dc_id"),
-        dayStr(col("event_datetime_local")).as("day"),
-        artistTokens(col("artist_name"), col("event_name")).as("toks"),
-        col("event_name").as("dc_name"),
-        col("artist_name").as("dc_artist"),
-        col("venue_name").as("dc_venue"),
-        col("city").as("dc_city"),
-        col("tickets_sold_total").as("dc_tickets"),
-        col("dc_ord"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    // (day, token) equi-join → overlap counts. Explode is the prefilter:
-    // only same-day pairs sharing >= 1 token are ever materialized.
-    val sgTok = sgP.select(col("sg_id"), col("day"), explode(col("toks")).as("tok"))
-    val dcTok = dcP.select(col("dc_id"), col("day"), explode(col("toks")).as("tok"))
-    val overlap = dcTok.join(sgTok, Seq("day", "tok"))
-      .groupBy(col("dc_id"), col("sg_id"))
-      .agg(count(lit(1)).as("overlap"))
-
-    val scored = overlap
-      .join(dcP.select(col("dc_id"), col("dc_ord")), Seq("dc_id"))
-      .join(sgP.select(col("sg_id"), col("sg_ord")), Seq("sg_id"))
-
-    // Each DICE's best SG; then each SG granted to its earliest DICE.
-    val wDc = Window.partitionBy(col("dc_id"))
-      .orderBy(col("overlap").desc, col("sg_ord").asc)
-    val wSg = Window.partitionBy(col("sg_id")).orderBy(col("dc_ord").asc)
-    // Persisted: three output branches (matched / SG-rest / DICE-rest)
-    // consume this two-column frame; without it each branch replays the
-    // token join + both window ranks (plan review showed 24 scans / 42
-    // exchanges at sf0.001). It is tiny (two ids per matched pair).
-    val matchedIds = scored
-      .withColumn("rk_dc", row_number().over(wDc)).filter(col("rk_dc") === 1)
-      .withColumn("rk_sg", row_number().over(wSg)).filter(col("rk_sg") === 1)
-      .select(col("dc_id"), col("sg_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    val matched = matchedIds
-      .join(sgP, Seq("sg_id"))
-      .join(dcP.drop("day"), Seq("dc_id"))
-      .select(
-        coalesce(col("sg_name"), col("dc_name"), lit("")).as("event_name"),
-        col("day").as("event_datetime_local"),
-        coalesce(col("sg_artist"), col("dc_artist"), lit("")).as("artist"),
-        coalesce(col("sg_venue"), col("dc_venue"), col("sg_city"), col("dc_city"), lit(""))
-          .as("venue"),
-        col("sg_tickets").as("shotgun_tickets_sold"),
-        col("dc_tickets").as("dice_tickets_sold"),
-        col("sg_id").as("shotgun_event_id"),
-        col("dc_id").as("dice_event_id"))
-
-    val sgRest = sgP.join(matchedIds.select(col("sg_id")), Seq("sg_id"), "left_anti")
-      .select(
-        coalesce(col("sg_name"), lit("")).as("event_name"),
-        col("day").as("event_datetime_local"),
-        coalesce(col("sg_artist"), lit("")).as("artist"),
-        coalesce(col("sg_venue"), col("sg_city"), lit("")).as("venue"),
-        col("sg_tickets").as("shotgun_tickets_sold"),
-        col("sg_id").as("shotgun_event_id"))
-
-    val dcRest = dcP.join(matchedIds.select(col("dc_id")), Seq("dc_id"), "left_anti")
-      .select(
-        coalesce(col("dc_name"), lit("")).as("event_name"),
-        col("day").as("event_datetime_local"),
-        coalesce(col("dc_artist"), lit("")).as("artist"),
-        coalesce(col("dc_venue"), col("dc_city"), lit("")).as("venue"),
-        col("dc_tickets").as("dice_tickets_sold"),
-        col("dc_id").as("dice_event_id"))
-
-    matched
-      .unionByName(sgRest, allowMissingColumns = true)
-      .unionByName(dcRest, allowMissingColumns = true)
-      .filter(col("event_datetime_local") >= lit(today))
+    val session = sg.sparkSession
+    import session.implicits._
+    def side(df: DataFrame, order: Column) =
+      project(df, order).filter(col("day") >= lit(today))
+        .groupBy(col("day")).as[String, GreedySide]
+    side(sg, sgOrder).cogroup(side(dc, dcOrder)) { (day, sgIt, dcIt) =>
+      val (sgs, dcs) = (sgIt.toArray, dcIt.toArray)
+      merge(day, sgs, dcs, rankMatch(sgs, dcs), coalesced)
+    }.toDF()
       .orderBy(col("event_datetime_local"), lower(col("event_name")))
   }
 
-  /** Observability for the (day, token) prefilter join — the
-    * consolidation analog of [[graft.ext.Dedup.hotBuckets]] (SURVEY
-    * §7.4: "salted token join if a token is ultra-frequent"). Per key
-    * present on BOTH sides: each side's row count and their product —
-    * the pairs the token join materializes for that key. A ubiquitous
-    * token that survives the stopword filter at corpus scale surfaces
-    * here (cheap: two keyed counts + a count-sized equi-join, no pair
-    * explosion) before it stalls a reducer; remedies are extending the
-    * stopword list or routing the join through Skew.saltedJoin with
-    * the flagged keys hot.
+  /** One day of [[consolidate]]'s two-rank rule; returns, per SG, the
+    * index of its matched DICE or -1. Each DICE takes its max-overlap
+    * SG (ties → smallest SG ord); each SG goes to the smallest-ord DICE
+    * that chose it. Overlaps are counted through a token → SG index, so
+    * only same-day pairs sharing a token are scored.
+    */
+  private def rankMatch(sgs: Array[GreedySide], dcs: Array[GreedySide]): Array[Int] = {
+    val index = scala.collection.mutable.HashMap.empty[String, List[Int]]
+    var i = sgs.length - 1
+    while (i >= 0) {
+      sgs(i).toks.foreach(t => index(t) = i :: index.getOrElse(t, Nil))
+      i -= 1
+    }
+    val overlap = new Array[Int](sgs.length)
+    val touched = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val owner = Array.fill(sgs.length)(-1)
+    var k = 0
+    while (k < dcs.length) {
+      dcs(k).toks.foreach(t => index.getOrElse(t, Nil).foreach { s =>
+        if (overlap(s) == 0) touched += s
+        overlap(s) += 1
+      })
+      var best = -1
+      touched.foreach { s =>
+        if (best < 0 || overlap(s) > overlap(best) ||
+            (overlap(s) == overlap(best) && sgs(s).ord < sgs(best).ord)) best = s
+      }
+      touched.foreach(s => overlap(s) = 0)
+      touched.clear()
+      if (best >= 0 && (owner(best) < 0 || dcs(k).ord < dcs(owner(best)).ord))
+        owner(best) = k
+      k += 1
+    }
+    owner
+  }
+
+  /** One day of [[consolidateGreedy]]: DICE in input order (`sgs` and
+    * `dcs` sorted by ord), each taking its strictly-best not-yet-used
+    * SG; returns, per SG, the index of its matched DICE or -1.
+    */
+  private def greedyMatch(sgs: Array[GreedySide], dcs: Array[GreedySide]): Array[Int] = {
+    val sgToks = sgs.map(_.toks.toSet)
+    val owner = Array.fill(sgs.length)(-1)
+    var k = 0
+    while (k < dcs.length) {
+      val dcT = dcs(k).toks.toSet
+      var bestI = -1
+      var bestOv = 0
+      var i = 0
+      while (i < sgs.length) {
+        if (owner(i) < 0) {
+          var ov = 0
+          val it = sgToks(i).iterator
+          while (it.hasNext) if (dcT.contains(it.next())) ov += 1
+          // strict > : ties keep the EARLIEST SG in input order
+          if (ov > 0 && ov > bestOv) { bestOv = ov; bestI = i }
+        }
+        i += 1
+      }
+      if (bestI >= 0) owner(bestI) = k
+      k += 1
+    }
+    owner
+  }
+
+  /** One day's output rows (`consolidate_events.py:111-162`) from the
+    * per-SG owner array: matched pairs and SG restants, then DICE
+    * restants. `pick` merges a column from its candidates in priority
+    * order.
+    */
+  private def merge(day: String, sgs: Array[GreedySide], dcs: Array[GreedySide],
+      owner: Array[Int], pick: Seq[Option[String]] => String): Iterator[GreedyOut] = {
+    val dcMatched = new Array[Boolean](dcs.length)
+    owner.foreach(c => if (c >= 0) dcMatched(c) = true)
+    val sgRows = sgs.indices.iterator.map { s =>
+      val sgr = sgs(s)
+      if (owner(s) < 0)
+        GreedyOut(pick(Seq(sgr.name)), day, pick(Seq(sgr.artist)),
+          pick(Seq(sgr.venue, sgr.city)), sgr.tickets, None, Some(sgr.id), None)
+      else {
+        val dcr = dcs(owner(s))
+        GreedyOut(pick(Seq(sgr.name, dcr.name)), day, pick(Seq(sgr.artist, dcr.artist)),
+          pick(Seq(sgr.venue, dcr.venue, sgr.city, dcr.city)),
+          sgr.tickets, dcr.tickets, Some(sgr.id), Some(dcr.id))
+      }
+    }
+    val dcRest = dcs.indices.iterator.filterNot(dcMatched).map { c =>
+      val dcr = dcs(c)
+      GreedyOut(pick(Seq(dcr.name)), day, pick(Seq(dcr.artist)),
+        pick(Seq(dcr.venue, dcr.city)), None, dcr.tickets, None, Some(dcr.id))
+    }
+    sgRows ++ dcRest
+  }
+
+  // SQL coalesce: first non-null string, else "".
+  private def coalesced(opts: Seq[Option[String]]): String =
+    opts.flatten.headOption.getOrElse("")
+
+  // Python `or` chain: first non-null AND non-empty string, else "".
+  private def pyOr(opts: Seq[Option[String]]): String =
+    opts.flatten.find(_.nonEmpty).getOrElse("")
+
+  /** Per-side input of both J1 variants: dated rows with the day key,
+    * the input order and the codegen'd artist tokens.
+    */
+  private def project(df: DataFrame, order: Column): Dataset[GreedySide] = {
+    val session = df.sparkSession
+    import session.implicits._
+    df.withColumn("ord", order)
+      .filter(col("event_datetime_local").isNotNull)
+      .select(
+        dayStr(col("event_datetime_local")).as("day"),
+        col("ord").cast("long").as("ord"),
+        col("event_id_provider").as("id"),
+        artistTokens(col("artist_name"), col("event_name")).as("toks"),
+        col("event_name").as("name"),
+        col("artist_name").as("artist"),
+        col("venue_name").as("venue"),
+        col("city").as("city"),
+        col("tickets_sold_total").cast("long").as("tickets"))
+      .as[GreedySide]
+  }
+
+  /** Observability for J1's candidate pairs — the consolidation analog
+    * of [[graft.ext.Dedup.hotBuckets]]. Per (day, token) key present on
+    * BOTH sides: each side's row count and their product, the pairs
+    * [[consolidate]]'s per-day token index scores for that key. There
+    * is no token join left to salt: a ubiquitous token that survives
+    * the stopword filter only adds scoring work inside its day's group
+    * (remedy: extend the stopword list). The unit to watch is the day —
+    * one cogroup group holds a whole day's events — so a skewed day
+    * shows here as many hot keys on the same `day`. Cheap: two keyed
+    * counts and a count-sized equi-join, no pair explosion.
     */
   def hotTokenKeys(sg: DataFrame, dc: DataFrame,
       minPairs: Long = 1000000L): DataFrame = {
@@ -193,7 +232,7 @@ object Consolidate {
     * on ties, `overlap > best[1]` at `consolidate_events.py:103`) not-
     * yet-used same-day SG event — so when two DICE events share a best
     * SG, the later one falls through to its NEXT-best unused SG, which
-    * the declarative two-window variant ([[consolidate]]) cannot express
+    * the declarative two-rank variant ([[consolidate]]) cannot express
     * (its conflict loser goes unmatched; divergence documented there).
     *
     * Candidates never cross a day boundary (`sg_by_day`,
@@ -213,81 +252,11 @@ object Consolidate {
     val session = sg.sparkSession
     import session.implicits._
 
-    def project(df: DataFrame, order: Column): Dataset[GreedySide] = df
-      .withColumn("ord", order)
-      .filter(col("event_datetime_local").isNotNull)
-      .select(
-        dayStr(col("event_datetime_local")).as("day"),
-        col("ord").cast("long").as("ord"),
-        col("event_id_provider").as("id"),
-        artistTokens(col("artist_name"), col("event_name")).as("toks"),
-        col("event_name").as("name"),
-        col("artist_name").as("artist"),
-        col("venue_name").as("venue"),
-        col("city").as("city"),
-        col("tickets_sold_total").cast("long").as("tickets"))
-      .as[GreedySide]
-
-    // Python `or` chain: first non-null AND non-empty string, else "".
-    def pyOr(opts: Option[String]*): String =
-      opts.flatten.find(_.nonEmpty).getOrElse("")
-
     val out = project(sg, sgOrder).groupByKey(_.day)
       .cogroup(project(dc, dcOrder).groupByKey(_.day)) { (day, sgIt, dcIt) =>
         val sgs = sgIt.toArray.sortBy(_.ord)
         val dcs = dcIt.toArray.sortBy(_.ord)
-        val sgToks = sgs.map(_.toks.toSet)
-        val usedSg = new Array[Boolean](sgs.length)
-        val usedDc = new Array[Boolean](dcs.length)
-        val buf = scala.collection.mutable.ArrayBuffer.empty[GreedyOut]
-        var k = 0
-        while (k < dcs.length) {
-          val dcr = dcs(k)
-          val dcT = dcr.toks.toSet
-          var bestI = -1
-          var bestOv = 0
-          var i = 0
-          while (i < sgs.length) {
-            if (!usedSg(i)) {
-              var ov = 0
-              val it = sgToks(i).iterator
-              while (it.hasNext) if (dcT.contains(it.next())) ov += 1
-              // strict > : ties keep the EARLIEST SG in input order
-              if (ov > 0 && ov > bestOv) { bestOv = ov; bestI = i }
-            }
-            i += 1
-          }
-          if (bestI >= 0) {
-            usedSg(bestI) = true
-            usedDc(k) = true
-            val sgr = sgs(bestI)
-            buf += GreedyOut(
-              pyOr(sgr.name, dcr.name), day,
-              pyOr(sgr.artist, dcr.artist),
-              pyOr(sgr.venue, dcr.venue, sgr.city, dcr.city),
-              sgr.tickets, dcr.tickets, Some(sgr.id), Some(dcr.id))
-          }
-          k += 1
-        }
-        var i = 0
-        while (i < sgs.length) { // SG restants (consolidate_events.py:133-145)
-          if (!usedSg(i)) {
-            val s = sgs(i)
-            buf += GreedyOut(pyOr(s.name), day, pyOr(s.artist),
-              pyOr(s.venue, s.city), s.tickets, None, Some(s.id), None)
-          }
-          i += 1
-        }
-        k = 0
-        while (k < dcs.length) { // DICE restants (consolidate_events.py:148-162)
-          if (!usedDc(k)) {
-            val c = dcs(k)
-            buf += GreedyOut(pyOr(c.name), day, pyOr(c.artist),
-              pyOr(c.venue, c.city), None, c.tickets, None, Some(c.id))
-          }
-          k += 1
-        }
-        buf.iterator
+        merge(day, sgs, dcs, greedyMatch(sgs, dcs), pyOr)
       }
 
     out.toDF()

@@ -3,6 +3,8 @@ package graft.etl
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import scala.util.control.NonFatal
+
 /** The E1 end-to-end pipeline (`cli.py:20-55`, SURVEY.md §3): sources →
   * normalize → consolidate → filter/sort → sinks, with the reference's
   * per-source failure isolation (`cli.py:22-35`: a failing source
@@ -17,10 +19,11 @@ object Pipeline {
   }
 
   /** Per-source failure isolation: evaluate a source thunk, degrade to
-    * empty on error (`cli.py:22-35`).
+    * empty on a non-fatal error (`cli.py:22-35`). Fatal errors (OOM,
+    * interrupts, linkage errors) still abort the run.
     */
   def sourceOrEmpty(spark: SparkSession)(thunk: => DataFrame): DataFrame =
-    try thunk catch { case _: Throwable => emptyEvents(spark) }
+    try thunk catch { case NonFatal(_) => emptyEvents(spark) }
 
   /** Full run: consolidate both normalized sources, write the three
     * sinks (overwrite snapshot K1, historized append K2, JSON preview
@@ -33,9 +36,9 @@ object Pipeline {
     * aborting the run — with strict parameters the exception would
     * fire at the caller before this method was entered.
     *
-    * One shuffle for the token join, one per window rank, one for the
-    * final sort — the same stage shape at any scale; sinks reuse the
-    * sorted result (cached to avoid recomputing the join per sink; the
+    * One day-keyed shuffle per source, one for the final sort — the
+    * same stage shape at any scale; sinks reuse the sorted result
+    * (cached to avoid recomputing the consolidation per sink; the
     * caller owns the cached result's lifecycle — unpersist it, or
     * clearCache between runs in a long-lived session).
     */

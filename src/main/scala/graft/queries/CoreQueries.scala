@@ -422,7 +422,7 @@ object CoreQueries {
         .orderBy(col("brand"), col("a_key"), col("b_key"))
     }),
 
-    // ---- J1 declarative variant: two-window rank consolidation ----
+    // ---- J1 declarative variant: two-rank rule in a per-day cogroup ----
     "q19_consolidate" -> ((s, d) => {
       val (sg, dc) = j1Frames(s, d)
       Consolidate.consolidate(sg, dc, "2024-01-15", col("ord"), col("ord"))

@@ -116,6 +116,86 @@ class ConsolidateSpec extends SparkSpec {
     assert(exact == windowed)
   }
 
+  /** Seeded J1 inputs: a six-word vocabulary over three days, so
+    * overlaps tie, several DICE pick one SG and the same token recurs
+    * on other days; null/empty names, null venues with a city, past
+    * days and dateless rows ride along. Ords are a shuffled permutation,
+    * so input order is not ord order.
+    */
+  private def j1Case(seed: Long, n: Int) = {
+    val rnd = new scala.util.Random(seed)
+    val words = Vector("alpha", "omega", "gamma", "delta", "zeta", "kappa")
+    def pick() = words(rnd.nextInt(words.length))
+    def opt[T](v: => T, pNone: Double): Option[T] =
+      if (rnd.nextDouble() < pNone) None else Some(v)
+    def side(p: String) = {
+      val evs = (0 until n).map { i =>
+        val dt = rnd.nextInt(12) match {
+          case 0 => None
+          case 1 => Some(d.minusDays(400L + rnd.nextInt(2)))
+          case _ => Some(d.plusDays(rnd.nextInt(3).toLong).plusMinutes(rnd.nextInt(600).toLong))
+        }
+        val name = rnd.nextInt(10) match {
+          case 0 => null
+          case 1 => ""
+          case _ => Seq.fill(1 + rnd.nextInt(3))(pick()).mkString(" ")
+        }
+        NormalizedEvent(provider = p, event_id_provider = s"$p$i", event_name = name,
+          event_datetime_local = dt, artist_name = opt(pick(), 0.5),
+          venue_name = opt(s"Venue ${rnd.nextInt(4)}", 0.5),
+          city = opt(s"City ${rnd.nextInt(3)}", 0.3),
+          tickets_sold_total = opt(rnd.nextInt(500).toLong, 0.2))
+      }
+      evs.zip(rnd.shuffle((0 until n).map(_.toLong)))
+        .toDF("e", "ord").select(col("e.*"), col("ord"))
+    }
+    (side("sg"), side("dc"))
+  }
+
+  test("J1: day-keyed cogroup returns the two-window model's row multiset") {
+    def full(eid: String, name: String, dt: Option[LocalDateTime], artist: Option[String] = None,
+        venue: Option[String] = None, city: Option[String] = None) =
+      NormalizedEvent(provider = "p", event_id_provider = eid, event_name = name,
+        event_datetime_local = dt, artist_name = artist, venue_name = venue, city = city,
+        tickets_sold_total = Some(eid.length.toLong))
+    def framed(evs: Seq[(NormalizedEvent, Long)]) =
+      evs.toDF("e", "ord").select(col("e.*"), col("ord"))
+    val edges = (
+      framed(Seq(
+        full("sg0", "Alpha Omega", Some(d)) -> 1L,
+        full("sg1", "Omega Alpha", Some(d)) -> 0L, // ties sg0, smaller ord
+        full("sg2", null, Some(d.plusDays(1)), artist = Some("Kappa"), city = Some("Lyon")) -> 2L,
+        full("sg3", "", Some(d.plusDays(1)), artist = Some("Zeta")) -> 3L,
+        full("sg4", "Gamma", None) -> 4L,
+        full("sg5", "Delta", Some(d.minusYears(2))) -> 5L)),
+      framed(Seq(
+        full("dc0", "Alpha Omega Live", Some(d), venue = Some("Olympia")) -> 5L,
+        full("dc1", "Alpha Omega", Some(d)) -> 2L, // claims sg1 first
+        full("dc2", "Alpha", Some(d.plusDays(2))) -> 0L, // same token, other day
+        full("dc3", "Kappa", Some(d.plusDays(1)), city = Some("Paris")) -> 1L,
+        full("dc4", null, Some(d.plusDays(1)), artist = Some("Zeta")) -> 3L,
+        full("dc5", "Delta", Some(d.minusYears(2))) -> 4L,
+        full("dc6", "Gamma", None) -> 6L)))
+    def bag(df: org.apache.spark.sql.DataFrame) =
+      df.collect().toSeq.map(_.toSeq).groupBy(identity).view.mapValues(_.size).toMap
+    val cases = edges +: Seq(11L, 12L, 13L).map(j1Case(_, 80))
+    cases.zipWithIndex.foreach { case ((sg, dc), i) =>
+      val fast = Consolidate.consolidate(sg, dc, "2026-01-01", col("ord"), col("ord"))
+      val model = J1WindowModel.consolidate(sg, dc, "2026-01-01", col("ord"), col("ord"))
+      assert(fast.schema.map(f => (f.name, f.dataType)) ==
+        model.schema.map(f => (f.name, f.dataType)), s"case $i schema")
+      val got = bag(fast)
+      assert(got == bag(model), s"case $i rows")
+      if (i == 0) {
+        val ids = got.keys.map(r => (r(6), r(7))).toSet
+        assert(ids == Set(("sg1", "dc1"), ("sg0", null), (null, "dc0"), (null, "dc2"),
+          ("sg2", "dc3"), ("sg3", "dc4")))
+        assert(got.keys.exists(r => r(6) == "sg2" && r(0) == "Kappa" && r(3) == "Lyon"))
+        assert(got.keys.exists(r => r(6) == "sg3" && r(0) == "" && r(2) == "Zeta"))
+      }
+    }
+  }
+
   test("hot-token audit flags only the planted ubiquitous token") {
     val sg = frame((1 to 20).map(i =>
       ev(s"sg$i", s"Headliner$i Night", Some(d), artist = Some("ubiqband"))))

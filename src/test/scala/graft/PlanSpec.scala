@@ -30,9 +30,17 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q19 flagship: no cartesian product, joins are keyed") {
+    // one day-keyed cogroup: a single hash exchange on `day` per side,
+    // no window rank, no broadcast, no cartesian
     val p = plan("q19_consolidate")
     assert(!p.contains("CartesianProduct"), p)
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
+    assert(!p.contains("Window"), p)
+    assert(!p.contains("BroadcastExchange"), p)
+    assert(p.contains("CoGroup"), p)
+    val hashKeys = "Exchange hashpartitioning\\(([^)]*)\\)".r
+      .findAllMatchIn(p).map(_.group(1)).toSeq
+    assert(hashKeys.size == 2 && hashKeys.forall(_.matches("day#\\d+, \\d+")), p)
   }
 
   test("q25 knn: query side broadcast, corpus streamed") {
