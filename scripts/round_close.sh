@@ -21,9 +21,19 @@ sbt -batch "runMain graft.VerifyConsolidate" 2>/dev/null \
 python3 scripts/diff_consolidate.py /tmp/ref_out.txt /tmp/spark_out.txt
 echo "== 3/5 full registry dump at $SF"
 sbt -batch "runMain graft.Verify $SF /tmp/close_verify" 2>&1 | tail -1
+# failures.json names every query that threw; any entry fails the gate
+python3 - /tmp/close_verify/failures.json <<'PY'
+import json, sys
+failures = json.load(open(sys.argv[1]))
+for f in failures:
+    print(f"FAILED {f['query']}: {f['class']}: {f['message'][:200]}")
+print(f"{len(failures)} queries failed to dump")
+sys.exit(1 if failures else 0)
+PY
 echo "== 4/5 DuckDB oracle over the full registry"
+# every query that did not match, by name (MISSING included), then the tally
 python3 scripts/verify_local.py "$SF" /tmp/close_verify 2>/dev/null \
-  | grep -vE "MISSING" | tail -3
+  | grep -E "MISSING|MISMATCH|ERROR|^== "
 echo "== 5/5 bench at sf0.1 (local[32]) -> bench_detail.json"
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt -batch "runMain graft.Bench" \
   2>/dev/null | tail -1

@@ -176,7 +176,7 @@ object PlanAudit {
     queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       try {
         // plan construction only — no execution; sf0.001 keeps any
-        // plan-time input materialization (sharedInputDir) trivial
+        // plan-time input materialization (Artifacts.dir) trivial
         val df = fn(spark, sfDir)
         val p = df.queryExecution.executedPlan.toString
         val cart = p.contains("CartesianProduct")

@@ -53,70 +53,6 @@ object CoreQueries {
     (sg, dc)
   }
 
-  /** Fresh temp dir per invocation for the sink read-back queries
-    * (q70/q72/q75/q78/q79). ONE shared JVM shutdown hook covers every
-    * live dir, and the previous invocation's dir for the same prefix is
-    * deleted eagerly (safe: each invocation fully materializes its
-    * read-back before the query can run again) — a bench/verify session
-    * invoking 70+ queries x 3 runs previously registered hundreds of
-    * hooks and kept every data copy on disk until JVM exit.
-    */
-  private val tempDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-  private lazy val tempDirHook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      tempDirs.values.forEach(p => rmTree(p.toFile))
-    }))
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles).foreach(_.foreach(rmTree))
-    f.delete(): Unit
-  }
-  private[queries] def tempQueryDir(prefix: String): String = {
-    tempDirHook
-    val dir = java.nio.file.Files.createTempDirectory(prefix)
-    Option(tempDirs.put(prefix, dir)).foreach(prev => rmTree(prev.toFile))
-    dir.toFile.getAbsolutePath
-  }
-
-  /** Session-shared materialization dir: `write` runs on the FIRST use
-    * of `key` this session; later invocations reuse the files (the
-    * bench invokes each query several times, and q78's stream INPUT is
-    * a deterministic function of the sf dir — rewriting it per run
-    * benches the parquet writer, not the stream). The path is
-    * per-process, so concurrent JVMs (a TimeOne session next to a
-    * bench) never clobber or shutdown-delete each other's input, and
-    * the key is registered only AFTER a successful write — a failed
-    * first write is retried on the next invocation instead of
-    * poisoning the whole session with partial files. Registered for
-    * the shared shutdown cleanup but exempt from eager per-run
-    * deletion.
-    */
-  /** Path-unique session-artifact key token for an input dir: basename
-    * (human-readable: `sf0.01`) plus a full-path digest. Basename alone
-    * is ambiguous — two corpora named `sf0.01` under different parents
-    * in one session would silently serve the first corpus' artifact to
-    * the second (ADVICE r10). The digest is the first 10 hex chars of
-    * md5(path), not String.hashCode (ADVICE r11): a 32-bit hash
-    * collision between two live paths would reintroduce exactly the
-    * silent wrong-artifact aliasing this token exists to prevent.
-    */
-  private[queries] def dirToken(d: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8")).take(5).map("%02x".format(_)).mkString
-    s"${new java.io.File(d).getName}_$md"
-  }
-
-  private[queries] def sharedInputDir(key: String)(write: String => Unit): String = {
-    tempDirHook
-    val p = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"${key}_p${ProcessHandle.current().pid()}")
-    if (!tempDirs.containsKey(key)) {
-      write(p.toString)
-      tempDirs.put(key, p): Unit
-    }
-    p.toString
-  }
-
   /** One simulated E1 daily run: the q69 raw generators (DICE
     * GraphQL shape + Shotgun card text, both derived deterministically
     * from `part`) pushed through the real normalize pipeline, with the
@@ -792,7 +728,7 @@ object CoreQueries {
     //      the read-back two-snapshot HISTORY, so the gate covers
     //      normalize x 2 + append + partitioned read-back in one row ----
     "q112_daily_history" -> ((s, d) => {
-      val dir = tempQueryDir("graft_q112_hist_")
+      val dir = Artifacts.tempDir("graft_q112_hist_")
       Sinks.appendHistorized(
         normalizedRunE1(s, d, "run-2024-06-01", shift = 0, extraDice = false), dir)
       Sinks.appendHistorized(
@@ -815,7 +751,7 @@ object CoreQueries {
     //      before the write so the compare covers the stored bytes,
     //      not a reader-side timestamp coercion ----
     "q70_sink_readback" -> ((s, d) => {
-      val dir = tempQueryDir("graft_q70_sink_")
+      val dir = Artifacts.tempDir("graft_q70_sink_")
       val ev = Tables.events(s, d).filter(col("event_type") === "purchase")
         .select(col("event_id"), col("user_id"),
           date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts_str"),
@@ -856,7 +792,7 @@ object CoreQueries {
     //      comparable types, and the partition column is re-cast to
     //      string in case partition type inference reads it as DATE ----
     "q72_csv_readback" -> ((s, d) => {
-      val dir = tempQueryDir("graft_q72_csv_")
+      val dir = Artifacts.tempDir("graft_q72_csv_")
       val src = Tables.orders(s, d)
         .filter(col("o_orderkey") % 10 === 0 &&
           col("o_orderdate") >= lit("1997-01-01") &&
@@ -884,7 +820,7 @@ object CoreQueries {
     //      back typed from Spark's JSON schema inference but are cast
     //      explicitly anyway ----
     "q75_json_readback" -> ((s, d) => {
-      val dir = tempQueryDir("graft_q75_json_")
+      val dir = Artifacts.tempDir("graft_q75_json_")
       val src = Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
           date_format(col("o_orderdate"), "yyyy-MM-dd").as("o_date"))
@@ -906,7 +842,7 @@ object CoreQueries {
     //      oracle that never saw the stream — the same read-back
     //      discipline as q70 ----
     "q78_stream_daily" -> ((s, d) => {
-      val dir = tempQueryDir("graft_q78_stream_")
+      val dir = Artifacts.tempDir("graft_q78_stream_")
       val out = s"$dir/out"; val ck = s"$dir/ck"
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("ts"), col("event_type"), col("value"))
@@ -915,8 +851,7 @@ object CoreQueries {
       // input is written once per session (deterministic per sf dir);
       // checkpoint + output stay fresh per invocation so every run
       // re-processes the whole stream.
-      val in = sharedInputDir(
-        s"graft_q78_in_${(d.hashCode & 0x7fffffff).toHexString}") { p =>
+      val in = Artifacts.dir("q78_in", s, d) { p =>
         ev.repartition(4).write.mode("overwrite").parquet(p)
       }
       val agg = graft.streaming.Streaming.dailyAggregation(
@@ -951,13 +886,12 @@ object CoreQueries {
     //      unbounded replay spends its whole budget on state-store
     //      writes (12s vs 3s at sf0.1) ----
     "q83_stream_interval_join" -> ((s, d) => {
-      val dir = tempQueryDir("graft_q83_ssjoin_")
+      val dir = Artifacts.tempDir("graft_q83_ssjoin_")
       val out = s"$dir/out"; val ck = s"$dir/ck"
       val ev = Tables.events(s, d)
         .filter(col("user_id") % 2 === 0)
         .select(col("event_id"), col("user_id"), col("ts"), col("event_type"))
-      val in = sharedInputDir(
-        s"graft_q83_in_${(d.hashCode & 0x7fffffff).toHexString}") { p =>
+      val in = Artifacts.dir("q83_in", s, d) { p =>
         ev.repartition(4).write.mode("overwrite").parquet(p)
       }
       val stream = graft.streaming.Streaming.eventsStream(s, in, ev.schema)
@@ -994,7 +928,7 @@ object CoreQueries {
     //      mid-replay (q83's discipline); bounded-state expiry is
     //      spec'd separately (StreamingSpec) ----
     "q106_stream_dedup" -> ((s, d) => {
-      val dir = tempQueryDir("graft_q106_sdedup_")
+      val dir = Artifacts.tempDir("graft_q106_sdedup_")
       val out = s"$dir/out"; val ck = s"$dir/ck"
       // q21's normalized content key — the planted duplicates differ in
       // raw text, so keying on it makes the stream actually drop rows
@@ -1003,8 +937,7 @@ object CoreQueries {
           lower(substring(col("text"), 1, 40)).as("norm_key"),
           expr("timestampadd(SECOND, doc_id, timestamp'2024-01-01 00:00:00')")
             .as("ts"))
-      val in = sharedInputDir(
-        s"graft_q106_in_${(d.hashCode & 0x7fffffff).toHexString}") { p =>
+      val in = Artifacts.dir("q106_in", s, d) { p =>
         docs.repartition(4).write.mode("overwrite").parquet(p)
       }
       val deduped = graft.streaming.Streaming.dedupStream(
@@ -1032,7 +965,7 @@ object CoreQueries {
     //      source is orderBy'd, making the limit-10 sample
     //      deterministic (TakeOrderedAndProject) ----
     "q79_debug_artifacts" -> ((s, d) => {
-      val dir = tempQueryDir("graft_q79_debug_")
+      val dir = Artifacts.tempDir("graft_q79_debug_")
       val src = Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
           col("o_totalprice"))

@@ -146,10 +146,7 @@ object ExtQueries {
           "ordered ingest cannot be guaranteed")
       // drop the stage dir (underscore-prefixed = hidden to Spark
       // readers anyway, but keep the ingest dir clean)
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(stage))
+      Artifacts.rmTree(new java.io.File(stage))
     }
   }
 
@@ -173,15 +170,14 @@ object ExtQueries {
     * shingle+minhash pass over raw text (q95 already proved the
     * read-back path incrementally; this is the same discipline for the
     * full-corpus consumers). Session-materialized on first use via
-    * [[CoreQueries.sharedInputDir]] (per-process, cleaned at JVM exit);
+    * [[Artifacts.dir]] (per-process, cleaned at JVM exit);
     * k=8 / r=2 / b=8 fixed because every consumer and every oracle is
     * calibrated to that banding. Value-identity with the recompute path
     * is inherent — bandedSignatures is per-row, so write+read-back
     * cannot change rows — and the unchanged DuckDB oracles gate it.
     */
   private def corpusSignatures(s: SparkSession, d: String): DataFrame = {
-    val dir = CoreQueries.sharedInputDir(
-      s"graft_sig8_${CoreQueries.dirToken(d)}") { p =>
+    val dir = Artifacts.dir("sig8", s, d) { p =>
       // overwrite: a failed partial first write leaves the directory
       // behind, and ErrorIfExists would then fail every retry for the
       // rest of the session instead of clobbering the partial output.
@@ -203,8 +199,7 @@ object ExtQueries {
     * strings.
     */
   private def corpusMinima(s: SparkSession, d: String): DataFrame = {
-    val dir = CoreQueries.sharedInputDir(
-      s"graft_minima16_${CoreQueries.dirToken(d)}") { p =>
+    val dir = Artifacts.dir("minima16", s, d) { p =>
       Tables.documents(s, d)
         .select(col("doc_id"), Dedup.minhashBands(col("text"), 8).as("mh"))
         .write.mode("overwrite").parquet(p)
@@ -224,8 +219,7 @@ object ExtQueries {
     */
   private def bandSweepCandidates(s: SparkSession, d: String,
       r: Int): DataFrame = {
-    val dir = CoreQueries.sharedInputDir(
-      s"graft_bandcand${r}_${CoreQueries.dirToken(d)}") { p =>
+    val dir = Artifacts.dir(s"bandcand$r", s, d) { p =>
       val sig = if (r == 2) corpusSignatures(s, d)
         else Dedup.bandedSignaturesFromMinima(corpusMinima(s, d), r)
       Dedup.minhashCandidates(sig).select(col("a_id"), col("b_id"))
@@ -242,8 +236,7 @@ object ExtQueries {
     * bench runs each.
     */
   private def lshRecallTruth(s: SparkSession, d: String): DataFrame = {
-    val dir = CoreQueries.sharedInputDir(
-      s"graft_lshtruth_${CoreQueries.dirToken(d)}") { p =>
+    val dir = Artifacts.dir("lshtruth", s, d) { p =>
       val pre = Tables.documents(s, d)
         .select(col("doc_id"), substring(col("text"), 1, 120).as("pre"))
       val sample = pre.filter(col("doc_id") % 29 === 0)
@@ -333,12 +326,12 @@ object ExtQueries {
   /** The persisted (band, minhash, bn) bucket-count artifact the
     * streaming cap consults instead of rescanning the base signature
     * table per micro-batch — session-materialized once next to the
-    * signature table it counts. `name` keys the artifact to that
+    * signature table it counts. `kind` keys the artifact to that
     * table.
     */
-  private def sigCountArtifact(s: SparkSession, name: String,
+  private def sigCountArtifact(s: SparkSession, kind: String, d: String,
       sig: DataFrame): DataFrame = {
-    val dir = CoreQueries.sharedInputDir(name) { p =>
+    val dir = Artifacts.dir(kind, s, d) { p =>
       sig.groupBy(col("band"), col("minhash"))
         .agg(count(lit(1)).as("bn")).write.mode("overwrite").parquet(p)
     }
@@ -486,7 +479,7 @@ object ExtQueries {
     * (q91/q95/q115/q135/q137/q141/q142): first hex nibble 0–2 ⇒ delta
     * (~19% of docs).
     */
-  private def isDeltaDoc(c: Column): Column =
+  private def isDelta(c: Column): Column =
     substring(md5(c.cast("string")), 1, 1).isin("0", "1", "2")
 
   /** Sub-split of the delta slice into two consecutive ingests (q142):
@@ -505,12 +498,11 @@ object ExtQueries {
   private def baseClusterArtifacts(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val docs = Tables.documents(s, d)
     val baseSig = v1SigArtifact(s, d)
-    val compDir = CoreQueries.sharedInputDir(
-      s"graft_q141_comp_${CoreQueries.dirToken(d)}") { p =>
+    val compDir = Artifacts.dir("q141_comp", s, d) { p =>
       val baseCand = graft.util.Persist(Dedup.minhashCandidates(baseSig)
         .filter(col("n_bands") >= 2).select(col("a_id"), col("b_id")))
       val comp = Dedup.connectedComponents(baseCand, "a_id", "b_id")
-      docs.filter(!isDeltaDoc(col("doc_id"))).select(col("doc_id"))
+      docs.filter(!isDelta(col("doc_id"))).select(col("doc_id"))
         .join(comp.select(col("id").as("doc_id"), col("comp")),
           Seq("doc_id"), "left")
         .select(col("doc_id"), coalesce(col("comp"), col("doc_id")).as("lab"))
@@ -560,9 +552,8 @@ object ExtQueries {
     * artifact.
     */
   private def baseSpanOwners(s: SparkSession, d: String): DataFrame = {
-    val dir = CoreQueries.sharedInputDir(
-      s"graft_q148_own_${CoreQueries.dirToken(d)}") { p =>
-      spanFrame(Tables.documents(s, d).filter(!isDeltaDoc(col("doc_id"))))
+    val dir = Artifacts.dir("q148_own", s, d) { p =>
+      spanFrame(Tables.documents(s, d).filter(!isDelta(col("doc_id"))))
         .select(col("k")).distinct()
         .write.mode("overwrite").parquet(p)
     }
@@ -694,7 +685,7 @@ object ExtQueries {
     * (planted-truth eval) and q138 (token impact).
     *
     * PERSISTED as a parquet artifact (session-materialized once via
-    * [[CoreQueries.sharedInputDir]]) rather than memory-Persist'd:
+    * [[Artifacts.dir]]) rather than memory-Persist'd:
     * at 100 TB the drop sets are an OUTPUT of the corpus build — every
     * curation report reads the drop-set table of the release, it does
     * not re-run four detector pipelines per report — the same
@@ -704,8 +695,7 @@ object ExtQueries {
     * DuckDB oracles gate it.
     */
   private def dedupDropSets(s: SparkSession, d: String): DataFrame = {
-    val dir = CoreQueries.sharedInputDir(
-      s"graft_dropsets_${CoreQueries.dirToken(d)}") { p =>
+    val dir = Artifacts.dir("dropsets", s, d) { p =>
       dropSetsRecompute(s, d).repartition(1).write.mode("overwrite").parquet(p)
     }
     s.read.parquet(dir)
@@ -721,8 +711,7 @@ object ExtQueries {
     * unchanged DuckDB oracle gates it.
     */
   private def containmentPairs(s: SparkSession, d: String): DataFrame = {
-    val dir = CoreQueries.sharedInputDir(
-      s"graft_contpairs_${CoreQueries.dirToken(d)}") { p =>
+    val dir = Artifacts.dir("contpairs", s, d) { p =>
       val docs = Tables.documents(s, d)
       val cand = Dedup.minhashCandidates(corpusSignatures(s, d))
         .filter(col("n_bands") >= 2).select(col("a_id"), col("b_id"))
@@ -811,10 +800,9 @@ object ExtQueries {
   /** The v1 release's banded signature table (the SAME persisted
     * artifact the incremental family reads — q95's key). */
   private def v1SigArtifact(s: SparkSession, d: String): DataFrame = {
-    val dir = CoreQueries.sharedInputDir(
-      s"graft_q95_sig_${CoreQueries.dirToken(d)}") { p =>
+    val dir = Artifacts.dir("q95_sig", s, d) { p =>
       Dedup.bandedSignatures(
-        Tables.documents(s, d).filter(!isDeltaDoc(col("doc_id"))),
+        Tables.documents(s, d).filter(!isDelta(col("doc_id"))),
         "text", "doc_id", k = 8).write.mode("overwrite").parquet(p)
     }
     s.read.parquet(dir)
@@ -823,10 +811,9 @@ object ExtQueries {
   /** The v1 release's SimHash signature table (q123's key):
     * (doc_id, sh, band, nib), ~4 narrow rows per doc. */
   private def v1SimhashSigArtifact(s: SparkSession, d: String): DataFrame = {
-    val dir = CoreQueries.sharedInputDir(
-      s"graft_q123_sig_${CoreQueries.dirToken(d)}") { p =>
+    val dir = Artifacts.dir("q123_sig", s, d) { p =>
       simhashBaseSig(Tables.documents(s, d)
-          .filter(!isDeltaDoc(col("doc_id"))))
+          .filter(!isDelta(col("doc_id"))))
         .write.mode("overwrite").parquet(p)
     }
     s.read.parquet(dir)
@@ -836,10 +823,9 @@ object ExtQueries {
     * (cell, id, vec, nrm) — the corpus build's embedding-index
     * output at 100 TB. */
   private def v1CellIndexArtifact(s: SparkSession, d: String): DataFrame = {
-    val dir = CoreQueries.sharedInputDir(
-      s"graft_q135_idx_${CoreQueries.dirToken(d)}") { p =>
+    val dir = Artifacts.dir("q135_idx", s, d) { p =>
       Similarity.cellIndex(
-        Tables.embeddings(s, d).filter(!isDeltaDoc(col("vec_id"))),
+        Tables.embeddings(s, d).filter(!isDelta(col("vec_id"))),
         "vec_id", "embedding").write.mode("overwrite").parquet(p)
     }
     s.read.parquet(dir)
@@ -849,8 +835,7 @@ object ExtQueries {
     * per-batch cell caps read this instead of re-aggregating the
     * index (q135's key). */
   private def v1CellCountArtifact(s: SparkSession, d: String): DataFrame = {
-    val dir = CoreQueries.sharedInputDir(
-      s"graft_q135cnt_${CoreQueries.dirToken(d)}") { p =>
+    val dir = Artifacts.dir("q135cnt", s, d) { p =>
       v1CellIndexArtifact(s, d).groupBy(col("cell"))
         .agg(count(lit(1)).as("cn"))
         .write.mode("overwrite").parquet(p)
@@ -860,12 +845,11 @@ object ExtQueries {
 
   /** The v1 release's four-family drop sets, persisted (q167/q168). */
   private def v1DropsArtifact(s: SparkSession, d: String): DataFrame = {
-    val dir = CoreQueries.sharedInputDir(
-      s"graft_dropsv1_${CoreQueries.dirToken(d)}") { p =>
+    val dir = Artifacts.dir("dropsv1", s, d) { p =>
       dropSetsRecomputeFrom(
-        Tables.documents(s, d).filter(!isDeltaDoc(col("doc_id"))),
+        Tables.documents(s, d).filter(!isDelta(col("doc_id"))),
         v1SigArtifact(s, d),
-        Tables.embeddings(s, d).filter(!isDeltaDoc(col("vec_id"))))
+        Tables.embeddings(s, d).filter(!isDelta(col("vec_id"))))
         .repartition(1).write.mode("overwrite").parquet(p)
     }
     s.read.parquet(dir)
@@ -873,10 +857,9 @@ object ExtQueries {
 
   /** The v1 release's containment pairs, persisted (q167/q168). */
   private def v1PairsArtifact(s: SparkSession, d: String): DataFrame = {
-    val dir = CoreQueries.sharedInputDir(
-      s"graft_contpv1_${CoreQueries.dirToken(d)}") { p =>
+    val dir = Artifacts.dir("contpv1", s, d) { p =>
       val baseDocs = Tables.documents(s, d)
-        .filter(!isDeltaDoc(col("doc_id")))
+        .filter(!isDelta(col("doc_id")))
       var cached: Option[DataFrame] = None
       containmentRescore(
         Dedup.minhashCandidates(v1SigArtifact(s, d))
@@ -892,10 +875,9 @@ object ExtQueries {
   /** The v1 release LEDGER as a persisted artifact — what a real v1
     * build ships; q167 diffs against it, q168 maintains FROM it. */
   private def v1ReleaseLedger(s: SparkSession, d: String): DataFrame = {
-    val dir = CoreQueries.sharedInputDir(
-      s"graft_ledgv1_${CoreQueries.dirToken(d)}") { p =>
+    val dir = Artifacts.dir("ledgv1", s, d) { p =>
       curatedLedger(
-        Tables.documents(s, d).filter(!isDeltaDoc(col("doc_id"))),
+        Tables.documents(s, d).filter(!isDelta(col("doc_id"))),
         v1DropsArtifact(s, d), v1PairsArtifact(s, d))
         .repartition(1).write.mode("overwrite").parquet(p)
     }
@@ -912,8 +894,7 @@ object ExtQueries {
     * DuckDB oracle gates it.
     */
   private def v2ReleaseLedger(s: SparkSession, d: String): DataFrame = {
-    val dir = CoreQueries.sharedInputDir(
-      s"graft_ledgv2_${CoreQueries.dirToken(d)}") { p =>
+    val dir = Artifacts.dir("ledgv2", s, d) { p =>
       curatedLedger(Tables.documents(s, d), dedupDropSets(s, d),
           containmentPairs(s, d))
         .repartition(1).write.mode("overwrite").parquet(p)
@@ -925,9 +906,8 @@ object ExtQueries {
     * min-(doc_id, span_idx) owner of every base span key (q148's rule;
     * q168/q171's maintenance input). */
   private def v1SpanOwnerArtifact(s: SparkSession, d: String): DataFrame = {
-    val dir = CoreQueries.sharedInputDir(
-      s"graft_spownv1_${CoreQueries.dirToken(d)}") { p =>
-      spanFrame(Tables.documents(s, d).filter(!isDeltaDoc(col("doc_id"))))
+    val dir = Artifacts.dir("spownv1", s, d) { p =>
+      spanFrame(Tables.documents(s, d).filter(!isDelta(col("doc_id"))))
         .groupBy(col("k"))
         .agg(min(struct(col("doc_id"), col("span_idx"))).as("o"))
         .select(col("k"), col("o.doc_id").as("doc_id"),
@@ -940,9 +920,8 @@ object ExtQueries {
   /** The v1 release's per-doc span counts — (doc_id, n_spans), the
     * denominator of the span verdict (q168/q171). */
   private def v1SpanCountArtifact(s: SparkSession, d: String): DataFrame = {
-    val dir = CoreQueries.sharedInputDir(
-      s"graft_spcntv1_${CoreQueries.dirToken(d)}") { p =>
-      spanFrame(Tables.documents(s, d).filter(!isDeltaDoc(col("doc_id"))))
+    val dir = Artifacts.dir("spcntv1", s, d) { p =>
+      spanFrame(Tables.documents(s, d).filter(!isDelta(col("doc_id"))))
         .groupBy(col("doc_id")).agg(max(col("n_spans")).as("n_spans"))
         .write.mode("overwrite").parquet(p)
     }
@@ -968,12 +947,11 @@ object ExtQueries {
     * q135/q148/q167 keys) — the `prior` input of q168's maintenance
     * step and the chain's starting release (q171). */
   private def v1Artifacts(s: SparkSession, d: String): RelArtifacts = {
-    val tok = CoreQueries.dirToken(d)
     RelArtifacts(
       sig = v1SigArtifact(s, d),
-      sigCnt = sigCountArtifact(s, s"graft_q95cnt_$tok", v1SigArtifact(s, d)),
+      sigCnt = sigCountArtifact(s, "q95cnt", d, v1SigArtifact(s, d)),
       shSig = v1SimhashSigArtifact(s, d),
-      shCnt = sigCountArtifact(s, s"graft_q123cnt_$tok",
+      shCnt = sigCountArtifact(s, "q123cnt", d,
         v1SimhashSigArtifact(s, d)),
       cellIdx = v1CellIndexArtifact(s, d),
       cellCnt = v1CellCountArtifact(s, d),
@@ -1269,12 +1247,12 @@ object ExtQueries {
     * dir that the next call retries with mode=overwrite — the session
     * key is registered only after all eleven writes succeed.
     */
-  private def maintainedArtifacts(s: SparkSession, key: String,
+  private def maintainedArtifacts(s: SparkSession, kind: String, d: String,
       prior: => RelArtifacts, delta: DataFrame, deltaEmb: DataFrame,
       corpus: DataFrame, priorDocs: DataFrame): RelArtifacts = {
     val names = Seq("sig", "sigcnt", "shsig", "shcnt", "cellidx",
       "cellcnt", "spanown", "spancnt", "drops", "pairs", "ledger")
-    val dir = CoreQueries.sharedInputDir(key) { p =>
+    val dir = Artifacts.dir(kind, s, d) { p =>
       var cached = List.empty[DataFrame]
       val a = ledgerMaintainStep(prior, delta, deltaEmb, corpus,
         priorDocs, onPersist = f => cached ::= f)
@@ -1315,10 +1293,11 @@ object ExtQueries {
     *     removed_docs = 0), so append IS the maintenance.
     * Gated end-to-end by q177 against q162's full-rebuild oracle.
     */
-  private def appendMaintainedArtifacts(s: SparkSession, key: String,
-      prior: => RelArtifacts, delta: DataFrame, deltaEmb: DataFrame,
-      corpus: DataFrame, priorDocs: DataFrame): RelArtifacts = {
-    val dir = CoreQueries.sharedInputDir(key) { p =>
+  private def appendMaintainedArtifacts(s: SparkSession, kind: String,
+      d: String, prior: => RelArtifacts, delta: DataFrame,
+      deltaEmb: DataFrame, corpus: DataFrame,
+      priorDocs: DataFrame): RelArtifacts = {
+    val dir = Artifacts.dir(kind, s, d) { p =>
       var cached = List.empty[DataFrame]
       val next = ledgerMaintainStep(prior, delta, deltaEmb, corpus,
         priorDocs, onPersist = f => cached ::= f)
@@ -1364,10 +1343,10 @@ object ExtQueries {
     */
   private def maintainedRelease(s: SparkSession, d: String): RelArtifacts = {
     val docs = Tables.documents(s, d)
-    maintainedArtifacts(s, s"graft_mntv2_${CoreQueries.dirToken(d)}",
-      v1Artifacts(s, d), docs.filter(isDeltaDoc(col("doc_id"))),
-      Tables.embeddings(s, d).filter(isDeltaDoc(col("vec_id"))),
-      corpus = docs, priorDocs = docs.filter(!isDeltaDoc(col("doc_id"))))
+    maintainedArtifacts(s, "mntv2", d,
+      v1Artifacts(s, d), docs.filter(isDelta(col("doc_id"))),
+      Tables.embeddings(s, d).filter(isDelta(col("vec_id"))),
+      corpus = docs, priorDocs = docs.filter(!isDelta(col("doc_id"))))
   }
 
   /** The 7-metric dataset-card frame shared by q155/q172/q173 (q150
@@ -1452,19 +1431,40 @@ object ExtQueries {
     * memoization discipline) and shared by q131 (distortion gain) and
     * q136 (trained-ADC recall). Rows: (sub, c, c_vals-ordered-by-pos).
     */
-  private val pqRefinedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Int, Int, Seq[Double])]]()
-
   private[graft] def pqRefinedCodebook(s: SparkSession,
       d: String): Seq[(Int, Int, Seq[Double])] =
-    pqRefinedCache.computeIfAbsent(d, { _ =>
-      Similarity.pqTrainIteration(Tables.embeddings(s, d), "vec_id", "embedding")
-        .collect()
-        .groupBy(r => (r.getLong(0).toInt, r.getLong(1).toInt))
-        .map { case ((sub, c), rows) =>
-          (sub, c, rows.sortBy(_.getLong(2)).map(_.getDouble(3)).toSeq) }
-        .toSeq.sortBy(x => (x._1, x._2))
-    })
+    Artifacts.memo("pqcb", s, d) {
+      codebookRows(Similarity.pqTrainIteration(Tables.embeddings(s, d),
+        "vec_id", "embedding"))
+    }
+
+  /** A collected codebook trainer frame (sub, c, pos, val) as rows
+    * (sub, c, c_vals-ordered-by-pos), sorted by (sub, c). */
+  private def codebookRows(trained: DataFrame): Seq[(Int, Int, Seq[Double])] =
+    trained.collect()
+      .groupBy(r => (r.getLong(0).toInt, r.getLong(1).toInt))
+      .map { case ((sub, c), rows) =>
+        (sub, c, rows.sortBy(_.getLong(2)).map(_.getDouble(3)).toSeq) }
+      .toSeq.sortBy(x => (x._1, x._2))
+
+  /** A collected k-means iteration frame (cell, pos, val) as rows
+    * (cell, centroid-ordered-by-pos), sorted by cell. */
+  private def centroidRows(iter: DataFrame): Seq[(Int, Seq[Double])] =
+    iter.collect()
+      .groupBy(_.getLong(0).toInt)
+      .map { case (cell, rows) =>
+        (cell, rows.sortBy(_.getLong(1)).map(_.getDouble(2)).toSeq) }
+      .toSeq.sortBy(_._1)
+
+  /** The 64 per-dimension population variances of the vector column
+    * `c`, rounded at 6 in Spark SQL (the oracle's `var_pop` rounding),
+    * as one one-row aggregate. */
+  private def dimVariances(f: DataFrame, c: String): Seq[Double] = {
+    val aggs = (0 until 64).map(i =>
+      round(var_pop(element_at(col(c), i + 1)), 6).as(s"v$i"))
+    val r = f.agg(aggs.head, aggs.tail: _*).collect()(0)
+    (0 until 64).map(r.getDouble)
+  }
 
   /** The IVF-PQ residual TRAINING pair, collected and memoized per
     * (input dir, slice): the one-Lloyd COARSE centroids (q74's
@@ -1478,12 +1478,9 @@ object ExtQueries {
     * Cells/centroids that captured no members simply don't appear
     * (the oracle's replay drops the same rows).
     */
-  private val ivfTrainCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Seq[(Int, Seq[Double])], Seq[(Int, Int, Seq[Double])])]()
-
   private[graft] def ivfPqTrained(s: SparkSession, d: String,
       baseOnly: Boolean): (Seq[(Int, Seq[Double])], Seq[(Int, Int, Seq[Double])]) =
-    ivfTrainCache.computeIfAbsent(s"$d#${if (baseOnly) "base" else "all"}", { _ =>
+    Artifacts.memo(s"ivfpq_${if (baseOnly) "base" else "all"}", s, d) {
       // training population = the oracle's usableVec contract exactly
       // (non-null, non-empty, norm > 0): the downstream null/empty
       // filters alone would let a zero-norm vector desynchronize the
@@ -1491,25 +1488,13 @@ object ExtQueries {
       val emb0 = Tables.embeddings(s, d).filter(
         Similarity.dotFold(col("embedding").cast("array<double>"),
           col("embedding").cast("array<double>")) > 0)
-      val emb = if (baseOnly)
-        emb0.filter(!substring(md5(col("vec_id").cast("string")), 1, 1)
-          .isin("0", "1", "2"))
-      else emb0
-      val coarse = Similarity.kmeansIteration(emb, "vec_id", "embedding")
-        .collect()
-        .groupBy(_.getLong(0).toInt)
-        .map { case (cell, rows) =>
-          (cell, rows.sortBy(_.getLong(1)).map(_.getDouble(2)).toSeq) }
-        .toSeq.sortBy(_._1)
-      val resid = Similarity
-        .pqTrainIteration(residualFrameOf(emb, coarse), "vec_id", "resid")
-        .collect()
-        .groupBy(r => (r.getLong(0).toInt, r.getLong(1).toInt))
-        .map { case ((sub, c), rows) =>
-          (sub, c, rows.sortBy(_.getLong(2)).map(_.getDouble(3)).toSeq) }
-        .toSeq.sortBy(x => (x._1, x._2))
+      val emb = if (baseOnly) emb0.filter(!isDelta(col("vec_id"))) else emb0
+      val coarse = centroidRows(
+        Similarity.kmeansIteration(emb, "vec_id", "embedding"))
+      val resid = codebookRows(Similarity
+        .pqTrainIteration(residualFrameOf(emb, coarse), "vec_id", "resid"))
       (coarse, resid)
-    })
+    }
 
   /** Collected codebook rows → the ordered-centroid-list map the
     * [[Similarity.pqAdcTopKWith]]-family consumers index by position.
@@ -1571,36 +1556,23 @@ object ExtQueries {
     * rank order is derived from exactly the values the oracle's
     * `var_pop` CTE rounds the same way.
     */
-  private val opqCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Seq[Double], Seq[Int])]()
-
   private[graft] def opqVarLayout(s: SparkSession, d: String): (Seq[Double], Seq[Int]) =
-    opqCache.computeIfAbsent(d, { _ =>
-      val aggs = (0 until 64).map(i =>
-        round(var_pop(element_at(col("vec"), i + 1)), 6).as(s"v$i"))
-      val r = anisoEmb(s, d).agg(aggs.head, aggs.tail: _*).collect()(0)
-      val vars = (0 until 64).map(r.getDouble)
+    Artifacts.memo("opqvar", s, d) {
+      val vars = dimVariances(anisoEmb(s, d), "vec")
       (vars, Similarity.balancedLayout(vars))
-    })
+    }
 
   /** Trained (one-Lloyd-step) codebook per (input dir, layout) — the
     * [[pqRefinedCodebook]] discipline generalized over the OPQ layout:
     * 1024 doubles collected once per session, inlined as literals by
     * every MSE consumer.
     */
-  private val opqRefinedCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Seq[(Int, Int, Seq[Double])]]()
-
   private[graft] def opqRefined(s: SparkSession, d: String, layout: String,
       perm: Seq[Int]): Seq[(Int, Int, Seq[Double])] =
-    opqRefinedCache.computeIfAbsent((d, layout), { _ =>
-      Similarity.pqTrainIterationPerm(anisoEmb(s, d), "vec_id", "vec", perm)
-        .collect()
-        .groupBy(r => (r.getLong(0).toInt, r.getLong(1).toInt))
-        .map { case ((sub, c), rows) =>
-          (sub, c, rows.sortBy(_.getLong(2)).map(_.getDouble(3)).toSeq) }
-        .toSeq.sortBy(x => (x._1, x._2))
-    })
+    Artifacts.memo(s"opqcb_$layout", s, d) {
+      codebookRows(
+        Similarity.pqTrainIterationPerm(anisoEmb(s, d), "vec_id", "vec", perm))
+    }
 
   /** The RESIDUAL-rung OPQ training bundle (VERDICT r16 #3), memoized
     * per input dir: one trained-coarse Lloyd step over the
@@ -1613,48 +1585,28 @@ object ExtQueries {
     * (16×64 + 64 + 64 values) — the pqRefinedCodebook collect
     * discipline.
     */
-  private val anisoResidCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Seq[(Int, Seq[Double])], Seq[Int])]()
-
   private[graft] def anisoResidualBase(s: SparkSession,
       d: String): (Seq[(Int, Seq[Double])], Seq[Int]) =
-    anisoResidCache.computeIfAbsent(d, { _ =>
+    Artifacts.memo("anisoresid", s, d) {
       val emb = anisoEmb(s, d)
-      val coarse = Similarity.kmeansIteration(emb, "vec_id", "vec")
-        .collect()
-        .groupBy(_.getLong(0).toInt)
-        .map { case (cell, rows) =>
-          (cell, rows.sortBy(_.getLong(1)).map(_.getDouble(2)).toSeq) }
-        .toSeq.sortBy(_._1)
-      val rf = residualFrameOf(emb, coarse, vecCol = "vec")
-      val aggs = (0 until 64).map(i =>
-        round(var_pop(element_at(col("resid"), i + 1)), 6).as(s"v$i"))
-      val r = rf.agg(aggs.head, aggs.tail: _*).collect()(0)
-      val vars = (0 until 64).map(r.getDouble)
+      val coarse = centroidRows(Similarity.kmeansIteration(emb, "vec_id", "vec"))
+      val vars = dimVariances(residualFrameOf(emb, coarse, vecCol = "vec"), "resid")
       (coarse, Similarity.balancedLayout(vars))
-    })
+    }
 
   /** One-Lloyd residual codebook per (input dir, layout) over the
     * [[anisoResidualBase]] residual frame — [[opqRefined]]'s
     * discipline at the residual rung (1024 doubles, collected once,
     * inlined as literals by the encode/ADC/MSE consumers).
     */
-  private val anisoResidCbCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), Seq[(Int, Int, Seq[Double])]]()
-
   private[graft] def anisoResidualCb(s: SparkSession, d: String,
       layout: String, perm: Seq[Int]): Seq[(Int, Int, Seq[Double])] =
-    anisoResidCbCache.computeIfAbsent((d, layout), { _ =>
+    Artifacts.memo(s"anisoresidcb_$layout", s, d) {
       val (coarse, _) = anisoResidualBase(s, d)
-      Similarity.pqTrainIterationPerm(
-          residualFrameOf(anisoEmb(s, d), coarse, vecCol = "vec"),
-          "vec_id", "resid", perm)
-        .collect()
-        .groupBy(r => (r.getLong(0).toInt, r.getLong(1).toInt))
-        .map { case ((sub, c), rows) =>
-          (sub, c, rows.sortBy(_.getLong(2)).map(_.getDouble(3)).toSeq) }
-        .toSeq.sortBy(x => (x._1, x._2))
-    })
+      codebookRows(Similarity.pqTrainIterationPerm(
+        residualFrameOf(anisoEmb(s, d), coarse, vecCol = "vec"),
+        "vec_id", "resid", perm))
+    }
 
   /** The q238 slices, shared with q240: the usable-vector population,
     * its md5 base/delta split, and the encoder-drifted delta (dims
@@ -1664,8 +1616,6 @@ object ExtQueries {
     */
   private def driftSlices(s: SparkSession,
       d: String): (DataFrame, DataFrame, DataFrame) = {
-    def isDelta(c: Column): Column =
-      substring(md5(c.cast("string")), 1, 1).isin("0", "1", "2")
     val usable = Tables.embeddings(s, d).filter(
       Similarity.dotFold(col("embedding").cast("array<double>"),
         col("embedding").cast("array<double>")) > 0)
@@ -1689,38 +1639,22 @@ object ExtQueries {
     * discipline); the residual frame is persisted across its three
     * consumers inside the one training pass.
     */
-  private val driftTrainCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Seq[(Int, Seq[Double])], Seq[Int],
-      Seq[(Int, Int, Seq[Double])], Seq[(Int, Int, Seq[Double])])]()
-
   private[graft] def driftRetrained(s: SparkSession, d: String):
       (Seq[(Int, Seq[Double])], Seq[Int],
        Seq[(Int, Int, Seq[Double])], Seq[(Int, Int, Seq[Double])]) =
-    driftTrainCache.computeIfAbsent(d, { _ =>
+    Artifacts.memo("driftretrain", s, d) {
       val (base, _, shifted) = driftSlices(s, d)
       val mixed = base.unionByName(shifted)
-      val coarse = Similarity.kmeansIteration(mixed, "vec_id", "embedding")
-        .collect()
-        .groupBy(_.getLong(0).toInt)
-        .map { case (cell, rows) =>
-          (cell, rows.sortBy(_.getLong(1)).map(_.getDouble(2)).toSeq) }
-        .toSeq.sortBy(_._1)
+      val coarse = centroidRows(
+        Similarity.kmeansIteration(mixed, "vec_id", "embedding"))
       val rf = graft.util.Persist(residualFrameOf(mixed, coarse))
-      val aggs = (0 until 64).map(i =>
-        round(var_pop(element_at(col("resid"), i + 1)), 6).as(s"v$i"))
-      val r = rf.agg(aggs.head, aggs.tail: _*).collect()(0)
-      val perm = Similarity.balancedLayout((0 until 64).map(r.getDouble))
-      def cbOf(p: Seq[Int]) = Similarity
-        .pqTrainIterationPerm(rf, "vec_id", "resid", p)
-        .collect()
-        .groupBy(x => (x.getLong(0).toInt, x.getLong(1).toInt))
-        .map { case ((sub, c), rows) =>
-          (sub, c, rows.sortBy(_.getLong(2)).map(_.getDouble(3)).toSeq) }
-        .toSeq.sortBy(x => (x._1, x._2))
+      val perm = Similarity.balancedLayout(dimVariances(rf, "resid"))
+      def cbOf(p: Seq[Int]) =
+        codebookRows(Similarity.pqTrainIterationPerm(rf, "vec_id", "resid", p))
       val out = (coarse, perm, cbOf(0 until 64), cbOf(perm))
       rf.unpersist()
       out
-    })
+    }
 
   /** The FROZEN residual-OPQ bundle for the REAL embeddings fixture
     * (VERDICT r17 #3), memoized per input dir: the q232 base-trained
@@ -1735,34 +1669,23 @@ object ExtQueries {
     * carried. All bounded collects (16×64 + 64 + 1024 doubles — the
     * [[ivfPqTrained]] discipline).
     */
-  private val ivfOpqCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Seq[(Int, Seq[Double])], Seq[Int], Seq[(Int, Int, Seq[Double])])]()
-
   private[graft] def ivfPqOpqTrained(s: SparkSession, d: String):
       (Seq[(Int, Seq[Double])], Seq[Int], Seq[(Int, Int, Seq[Double])]) =
-    ivfOpqCache.computeIfAbsent(d, { _ =>
+    Artifacts.memo("ivfpqopq", s, d) {
       val (coarse, _) = ivfPqTrained(s, d, baseOnly = true)
       // the exact training population ivfPqTrained(base) saw: the
       // oracle's usableVec contract + the md5 base rule
       val baseEmb = Tables.embeddings(s, d)
         .filter(Similarity.dotFold(col("embedding").cast("array<double>"),
           col("embedding").cast("array<double>")) > 0)
-        .filter(!substring(md5(col("vec_id").cast("string")), 1, 1)
-          .isin("0", "1", "2"))
+        .filter(!isDelta(col("vec_id")))
       val rf = graft.util.Persist(residualFrameOf(baseEmb, coarse))
-      val aggs = (0 until 64).map(i =>
-        round(var_pop(element_at(col("resid"), i + 1)), 6).as(s"v$i"))
-      val r = rf.agg(aggs.head, aggs.tail: _*).collect()(0)
-      val perm = Similarity.balancedLayout((0 until 64).map(r.getDouble))
-      val cb = Similarity.pqTrainIterationPerm(rf, "vec_id", "resid", perm)
-        .collect()
-        .groupBy(x => (x.getLong(0).toInt, x.getLong(1).toInt))
-        .map { case ((sub, c), rows) =>
-          (sub, c, rows.sortBy(_.getLong(2)).map(_.getDouble(3)).toSeq) }
-        .toSeq.sortBy(x => (x._1, x._2))
+      val perm = Similarity.balancedLayout(dimVariances(rf, "resid"))
+      val cb = codebookRows(
+        Similarity.pqTrainIterationPerm(rf, "vec_id", "resid", perm))
       rf.unpersist()
       (coarse, perm, cb)
-    })
+    }
 
 
   /** q96's 5-round BPE trainer loop, factored out so q122 can APPLY
@@ -1774,12 +1697,9 @@ object ExtQueries {
     * consumer (q96's presentation, q122's encode chain) reads the same
     * table, the corpusSignatures discipline applied to the tokenizer.
     */
-  private val bpeMergeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Long, String, String, Long)]]()
-
   private[graft] def bpeTrainedMerges(s: SparkSession,
       d: String): Seq[(Long, String, String, Long)] =
-    bpeMergeCache.computeIfAbsent(d, { _ =>
+    Artifacts.memo("bpemerges", s, d) {
       val S = "\u0001"; val SS = S + S
       val words0 = graft.util.Persist(Tables.documents(s, d)
         .select(explode(TA.wsTokens(lower(col("text")))).as("word"))
@@ -1810,7 +1730,7 @@ object ExtQueries {
         }
       }
       merges.toSeq
-    })
+    }
 
   /** The corpus encoded with [[bpeTrainedMerges]]' trained table —
     * per-doc whitespace-word and BPE-token counts, shared by q122
@@ -2559,8 +2479,7 @@ object ExtQueries {
     "q91_incremental_dedup" -> ((s, d) => {
       val docs = Tables.documents(s, d)
         .withColumn("side",
-          when(substring(md5(col("doc_id").cast("string")), 1, 1)
-            .isin("0", "1", "2"), lit("delta")).otherwise(lit("base")))
+          when(isDelta(col("doc_id")), lit("delta")).otherwise(lit("base")))
       val sig = corpusSignatures(s, d)
       val sides = docs.select(col("doc_id"), col("side"))
       Dedup.minhashCandidates(sig)
@@ -2578,7 +2497,7 @@ object ExtQueries {
     // ---- incremental dedup against PERSISTED signatures — q91's
     //      100 TB promise made real. The base corpus' banded signatures
     //      are materialized once as a parquet table ("the last run's
-    //      output", CoreQueries.sharedInputDir session-store) and the
+    //      output", the Artifacts.dir session store) and the
     //      incremental pass READS THEM BACK: the minhash pipeline runs
     //      only over the new batch, the base side is a scan of
     //      (doc_id, band, minhash) ~1% the corpus width. Candidate join
@@ -2589,8 +2508,6 @@ object ExtQueries {
     //      either way. Oracle: same SQL as q91 — the persisted path
     //      must be value-identical to the recompute path ----
     "q95_incremental_persisted" -> ((s, d) => {
-      def isDelta(c: Column): Column =
-        substring(md5(c.cast("string")), 1, 1).isin("0", "1", "2")
       val docs = Tables.documents(s, d)
       val baseSig = v1SigArtifact(s, d)
       val deltaSig = Dedup.bandedSignatures(docs.filter(isDelta(col("doc_id"))),
@@ -2798,21 +2715,17 @@ object ExtQueries {
     //      divergence as q115: per base+batch bucket counting vs
     //      whole-corpus in q85 — identical below the cap.) ----
     "q123_stream_simhash" -> ((s, d) => {
-      def isDelta(c: Column): Column =
-        substring(md5(c.cast("string")), 1, 1).isin("0", "1", "2")
       val docs = Tables.documents(s, d)
       // persisted base SimHash signature table — at 100 TB this is the
       // last corpus build's fingerprint index
       val baseSig = v1SimhashSigArtifact(s, d)
-      val baseCnt = sigCountArtifact(s,
-        s"graft_q123cnt_${CoreQueries.dirToken(d)}", baseSig)
+      val baseCnt = sigCountArtifact(s, "q123cnt", d, baseSig)
       val delta = docs.filter(isDelta(col("doc_id")))
         .select(col("doc_id"), col("text"))
-      val in = CoreQueries.sharedInputDir(
-        s"graft_q123_in_${(d.hashCode & 0x7fffffff).toHexString}") { p =>
+      val in = Artifacts.dir("q123_in", s, d) { p =>
         delta.repartition(4).write.mode("overwrite").parquet(p)
       }
-      val dir = CoreQueries.tempQueryDir("graft_q123_ssimhash_")
+      val dir = Artifacts.tempDir("graft_q123_ssimhash_")
       val out = s"$dir/out"; val ck = s"$dir/ck"
       val stream = graft.streaming.Streaming.eventsStream(s, in, delta.schema)
       val prevParts = s.conf.get("spark.sql.shuffle.partitions")
@@ -3908,23 +3821,19 @@ object ExtQueries {
     //      below the cap, i.e. everywhere outside degenerate
     //      boilerplate buckets.) ----
     "q115_stream_neardup" -> ((s, d) => {
-      def isDelta(c: Column): Column =
-        substring(md5(c.cast("string")), 1, 1).isin("0", "1", "2")
       val docs = Tables.documents(s, d)
       // the same persisted base-signature table q95 reads (shared key,
       // so one materialization serves both consumers per session)
       val baseSig = v1SigArtifact(s, d)
       // persisted bucket-count artifact: the per-batch cap reads this
       // instead of re-aggregating the signature table 4 times
-      val baseCnt = sigCountArtifact(s,
-        s"graft_q95cnt_${CoreQueries.dirToken(d)}", baseSig)
+      val baseCnt = sigCountArtifact(s, "q95cnt", d, baseSig)
       val delta = docs.filter(isDelta(col("doc_id")))
         .select(col("doc_id"), col("text"))
-      val in = CoreQueries.sharedInputDir(
-        s"graft_q115_in_${(d.hashCode & 0x7fffffff).toHexString}") { p =>
+      val in = Artifacts.dir("q115_in", s, d) { p =>
         delta.repartition(4).write.mode("overwrite").parquet(p)
       }
-      val dir = CoreQueries.tempQueryDir("graft_q115_sdedup_")
+      val dir = Artifacts.tempDir("graft_q115_sdedup_")
       val out = s"$dir/out"; val ck = s"$dir/ck"
       val stream = graft.streaming.Streaming.eventsStream(s, in, delta.schema)
       val prevParts = s.conf.get("spark.sql.shuffle.partitions")
@@ -4256,8 +4165,6 @@ object ExtQueries {
     //      cap divergence as q115/q123: per base+batch cell counting
     //      vs whole-corpus — identical below the cap.) ----
     "q135_stream_semantic" -> ((s, d) => {
-      def isDelta(c: Column): Column =
-        substring(md5(c.cast("string")), 1, 1).isin("0", "1", "2")
       val emb = Tables.embeddings(s, d)
       // persisted base cell index + (cell, cn) count artifact: the
       // corpus build's embedding-index output; per-batch cell caps
@@ -4266,11 +4173,10 @@ object ExtQueries {
       val baseCnt = v1CellCountArtifact(s, d)
       val delta = emb.filter(isDelta(col("vec_id")))
         .select(col("vec_id"), col("embedding"))
-      val in = CoreQueries.sharedInputDir(
-        s"graft_q135_in_${(d.hashCode & 0x7fffffff).toHexString}") { p =>
+      val in = Artifacts.dir("q135_in", s, d) { p =>
         delta.repartition(4).write.mode("overwrite").parquet(p)
       }
-      val dir = CoreQueries.tempQueryDir("graft_q135_ssem_")
+      val dir = Artifacts.tempDir("graft_q135_ssem_")
       val out = s"$dir/out"; val ck = s"$dir/ck"
       val stream = graft.streaming.Streaming.eventsStream(s, in, delta.schema)
       val prevParts = s.conf.get("spark.sql.shuffle.partitions")
@@ -4338,22 +4244,18 @@ object ExtQueries {
     //      deployment never rebuild). `src` tags which path produced
     //      each row; the oracle derives it from the md5 split rule. ----
     "q137_stream_index_ingest" -> ((s, d) => {
-      def isDelta(c: Column): Column =
-        substring(md5(c.cast("string")), 1, 1).isin("0", "1", "2")
       val emb = Tables.embeddings(s, d)
-      val idxDir = CoreQueries.sharedInputDir(
-        s"graft_q137_idx_${CoreQueries.dirToken(d)}") { p =>
+      val idxDir = Artifacts.dir("q137_idx", s, d) { p =>
         Similarity.quantizedIndex(emb.filter(!isDelta(col("vec_id"))),
           "vec_id", "embedding").write.mode("overwrite").parquet(p)
       }
       val baseIdx = s.read.parquet(idxDir)
       val delta = emb.filter(isDelta(col("vec_id")))
         .select(col("vec_id"), col("embedding"))
-      val in = CoreQueries.sharedInputDir(
-        s"graft_q137_in_${(d.hashCode & 0x7fffffff).toHexString}") { p =>
+      val in = Artifacts.dir("q137_in", s, d) { p =>
         delta.repartition(4).write.mode("overwrite").parquet(p)
       }
-      val dir = CoreQueries.tempQueryDir("graft_q137_sidx_")
+      val dir = Artifacts.tempDir("graft_q137_sidx_")
       val out = s"$dir/out"; val ck = s"$dir/ck"
       val stream = graft.streaming.Streaming.eventsStream(s, in, delta.schema)
       val prevParts = s.conf.get("spark.sql.shuffle.partitions")
@@ -4499,18 +4401,17 @@ object ExtQueries {
       val docs = Tables.documents(s, d)
       val (baseSig, baseLab) = baseClusterArtifacts(s, d)
       val deltaSig = Dedup.bandedSignatures(
-        docs.filter(isDeltaDoc(col("doc_id"))), "text", "doc_id", k = 8)
+        docs.filter(isDelta(col("doc_id"))), "text", "doc_id", k = 8)
       val cross = streamSigCandidates(
         deltaSig.select(col("band"), col("minhash"), col("doc_id").as("delta_id")),
         baseSig.select(col("band"), col("minhash"), col("doc_id").as("base_id")),
         minBands = 2,
-        baseCounts = Some(sigCountArtifact(s,
-          s"graft_q95cnt_${CoreQueries.dirToken(d)}", baseSig)))
+        baseCounts = Some(sigCountArtifact(s, "q95cnt", d, baseSig)))
         .select(col("delta_id"), col("base_id"))
       val dd = Dedup.minhashCandidates(deltaSig)
         .filter(col("n_bands") >= 2).select(col("a_id"), col("b_id"))
       Dedup.incrementalComponents(baseLab, cross, dd,
-          docs.filter(isDeltaDoc(col("doc_id"))).select(col("doc_id")))
+          docs.filter(isDelta(col("doc_id"))).select(col("doc_id")))
         .orderBy(col("doc_id"))
     }),
 
@@ -4528,23 +4429,21 @@ object ExtQueries {
     "q142_cluster_ingest_chain" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       val (sig0, lab0) = baseClusterArtifacts(s, d)
-      val d1 = docs.filter(isDeltaDoc(col("doc_id")) && isFirstIngest(col("doc_id")))
+      val d1 = docs.filter(isDelta(col("doc_id")) && isFirstIngest(col("doc_id")))
         .select(col("doc_id"), col("text"))
-      val d2 = docs.filter(isDeltaDoc(col("doc_id")) && !isFirstIngest(col("doc_id")))
+      val d2 = docs.filter(isDelta(col("doc_id")) && !isFirstIngest(col("doc_id")))
         .select(col("doc_id"), col("text"))
       val (sig1, lab1raw) = clusterIngestStep(sig0, lab0, d1,
-        baseCounts = Some(sigCountArtifact(s,
-          s"graft_q95cnt_${CoreQueries.dirToken(d)}", sig0)))
+        baseCounts = Some(sigCountArtifact(s, "q95cnt", d, sig0)))
       // run-1 output is a PERSISTED artifact run 2 reads back
-      val lab1Dir = CoreQueries.sharedInputDir(
-        s"graft_q142_lab1_${CoreQueries.dirToken(d)}") { p =>
+      val lab1Dir = Artifacts.dir("q142_lab1", s, d) { p =>
         lab1raw.write.mode("overwrite").parquet(p)
       }
       val (_, lab2) = clusterIngestStep(sig1, s.read.parquet(lab1Dir), d2)
       lab2.select(col("doc_id"), col("lab").as("cluster_id"),
-          when(isDeltaDoc(col("doc_id")) && isFirstIngest(col("doc_id")),
+          when(isDelta(col("doc_id")) && isFirstIngest(col("doc_id")),
             lit("delta1"))
-            .when(isDeltaDoc(col("doc_id")), lit("delta2"))
+            .when(isDelta(col("doc_id")), lit("delta2"))
             .otherwise(lit("base")).as("src"))
         .orderBy(col("doc_id"))
     }),
@@ -4611,13 +4510,12 @@ object ExtQueries {
     "q144_stream_clusters" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       val (baseSig, baseLab) = baseClusterArtifacts(s, d)
-      val delta = docs.filter(isDeltaDoc(col("doc_id")))
+      val delta = docs.filter(isDelta(col("doc_id")))
         .select(col("doc_id"), col("text"))
-      val in = CoreQueries.sharedInputDir(
-        s"graft_q144_in_${(d.hashCode & 0x7fffffff).toHexString}") { p =>
+      val in = Artifacts.dir("q144_in", s, d) { p =>
         delta.repartition(4).write.mode("overwrite").parquet(p)
       }
-      val dir = CoreQueries.tempQueryDir("graft_q144_sclus_")
+      val dir = Artifacts.tempDir("graft_q144_sclus_")
       val sigRoot = s"$dir/sig"; val labRoot = s"$dir/lab"; val ck = s"$dir/ck"
       val stream = graft.streaming.Streaming.eventsStream(s, in, delta.schema)
       val prevParts = s.conf.get("spark.sql.shuffle.partitions")
@@ -4653,7 +4551,7 @@ object ExtQueries {
         .join(broadcast(versions.agg(max(col("batch_id")).as("m"))),
           col("batch_id") === col("m"))
         .select(col("doc_id"), col("lab").as("cluster_id"),
-          when(isDeltaDoc(col("doc_id")), lit("delta"))
+          when(isDelta(col("doc_id")), lit("delta"))
             .otherwise(lit("base")).as("src"))
         .orderBy(col("doc_id"))
     }),
@@ -4668,13 +4566,13 @@ object ExtQueries {
     //      (TakeOrderedAndProject), one scan, one 2-row aggregate. ----
     "q145_vocab_drift" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val baseVocab = docs.filter(!isDeltaDoc(col("doc_id")))
+      val baseVocab = docs.filter(!isDelta(col("doc_id")))
         .select(explode(TA.wsTokens(lower(col("text")))).as("term"))
         .groupBy(col("term")).agg(count(lit(1)).as("freq"))
         .orderBy(col("freq").desc, col("term")).limit(20)
         .select(col("term"), lit(true).as("in_vocab"))
       docs.select(
-          when(isDeltaDoc(col("doc_id")), lit("delta"))
+          when(isDelta(col("doc_id")), lit("delta"))
             .otherwise(lit("base")).as("side"),
           explode(TA.wsTokens(lower(col("text")))).as("term"))
         .join(broadcast(baseVocab), Seq("term"), "left")
@@ -4722,10 +4620,10 @@ object ExtQueries {
           .select(col("source"), col("cnt"),
             round(col("cnt").cast("double") / col("tot"), 6).as("frac"))
       }
-      val b = share(docs.filter(!isDeltaDoc(col("doc_id"))))
+      val b = share(docs.filter(!isDelta(col("doc_id"))))
         .select(col("source"), col("cnt").as("base_docs"),
           col("frac").as("base_frac"))
-      val dl = share(docs.filter(isDeltaDoc(col("doc_id"))))
+      val dl = share(docs.filter(isDelta(col("doc_id"))))
         .select(col("source"), col("cnt").as("delta_docs"),
           col("frac").as("delta_frac"))
       b.join(dl, Seq("source"), "full_outer")
@@ -4755,7 +4653,7 @@ object ExtQueries {
       import org.apache.spark.sql.expressions.Window
       val docs = Tables.documents(s, d)
       val baseOwn = baseSpanOwners(s, d)
-      val delta = docs.filter(isDeltaDoc(col("doc_id")))
+      val delta = docs.filter(isDelta(col("doc_id")))
       val dsp = spanFrame(delta)
       val kept = dsp
         .join(baseOwn, Seq("k"), "left_anti")
@@ -4790,13 +4688,12 @@ object ExtQueries {
     "q149_stream_spans" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       val baseOwn = baseSpanOwners(s, d)
-      val delta = docs.filter(isDeltaDoc(col("doc_id")))
+      val delta = docs.filter(isDelta(col("doc_id")))
         .select(col("doc_id"), col("text"))
-      val in = CoreQueries.sharedInputDir(
-        s"graft_q149_in_${(d.hashCode & 0x7fffffff).toHexString}") { p =>
+      val in = Artifacts.dir("q149_in", s, d) { p =>
         delta.repartition(4).write.mode("overwrite").parquet(p)
       }
-      val dir = CoreQueries.tempQueryDir("graft_q149_sspan_")
+      val dir = Artifacts.tempDir("graft_q149_sspan_")
       val ownRoot = s"$dir/own"; val ck = s"$dir/ck"
       val stream = graft.streaming.Streaming.eventsStream(s, in, delta.schema)
       val prevParts = s.conf.get("spark.sql.shuffle.partitions")
@@ -4984,8 +4881,6 @@ object ExtQueries {
     //      sums are exact in doubles, so both engines agree bit-for-
     //      bit before the final round ----
     "q154_centroid_drift" -> ((s, d) => {
-      def isDelta(c: Column): Column =
-        substring(md5(c.cast("string")), 1, 1).isin("0", "1", "2")
       val emb = Tables.embeddings(s, d)
       def cellMeans(side: DataFrame): DataFrame =
         Similarity.quantizedIndex(side, "vec_id", "embedding")
@@ -5026,8 +4921,8 @@ object ExtQueries {
     "q155_release_diff" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       val enc = bpeEncoded(s, d)
-      val b = releaseCard(docs.filter(!isDeltaDoc(col("doc_id"))),
-          enc.filter(!isDeltaDoc(col("doc_id"))))
+      val b = releaseCard(docs.filter(!isDelta(col("doc_id"))),
+          enc.filter(!isDelta(col("doc_id"))))
         .select(col("metric"), col("value").as("base_value"))
       val n = releaseCard(docs, enc)
         .select(col("metric"), col("value").as("new_value"))
@@ -5095,7 +4990,7 @@ object ExtQueries {
     "q158_incremental_containment" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       val sides = docs.select(col("doc_id"),
-        when(isDeltaDoc(col("doc_id")), lit("delta"))
+        when(isDelta(col("doc_id")), lit("delta"))
           .otherwise(lit("base")).as("side"))
       val cand = Dedup.minhashCandidates(corpusSignatures(s, d))
         .filter(col("n_bands") >= 2)
@@ -5113,8 +5008,8 @@ object ExtQueries {
       // any shingle work — the base side's per-ingest cost stays
       // delta-proportional
       containmentRescore(cand, "delta_id", "base_id",
-          docs.filter(isDeltaDoc(col("doc_id"))),
-          docs.filter(!isDeltaDoc(col("doc_id"))),
+          docs.filter(isDelta(col("doc_id"))),
+          docs.filter(!isDelta(col("doc_id"))),
           "cont_delta", "cont_base")
         .orderBy(col("delta_id"), col("base_id"))
     }),
@@ -5407,9 +5302,9 @@ object ExtQueries {
       drainStepCache()
       val docs = Tables.documents(s, d)
       ledgerMaintainStep(v1Artifacts(s, d),
-        docs.filter(isDeltaDoc(col("doc_id"))),
-        Tables.embeddings(s, d).filter(isDeltaDoc(col("vec_id"))),
-        corpus = docs, priorDocs = docs.filter(!isDeltaDoc(col("doc_id"))),
+        docs.filter(isDelta(col("doc_id"))),
+        Tables.embeddings(s, d).filter(isDelta(col("vec_id"))),
+        corpus = docs, priorDocs = docs.filter(!isDelta(col("doc_id"))),
         onPersist = stepOnPersist)
         .ledger.orderBy(col("doc_id"))
     }),
@@ -5435,16 +5330,15 @@ object ExtQueries {
     //      final held set in the last step regardless of chain depth ----
     "q171_ledger_chain" -> ((s, d) => {
       drainStepCache()
-      val tok = CoreQueries.dirToken(d)
       val docs = Tables.documents(s, d)
       val emb = Tables.embeddings(s, d)
-      def d1(c: Column) = isDeltaDoc(c) && isFirstIngest(c)
-      def d2(c: Column) = isDeltaDoc(c) && !isFirstIngest(c)
-      val v2 = maintainedArtifacts(s, s"graft_chainv2_$tok",
+      def d1(c: Column) = isDelta(c) && isFirstIngest(c)
+      def d2(c: Column) = isDelta(c) && !isFirstIngest(c)
+      val v2 = maintainedArtifacts(s, "chainv2", d,
         v1Artifacts(s, d),
         docs.filter(d1(col("doc_id"))), emb.filter(d1(col("vec_id"))),
         corpus = docs.filter(!d2(col("doc_id"))),
-        priorDocs = docs.filter(!isDeltaDoc(col("doc_id"))))
+        priorDocs = docs.filter(!isDelta(col("doc_id"))))
       ledgerMaintainStep(v2,
         docs.filter(d2(col("doc_id"))), emb.filter(d2(col("vec_id"))),
         corpus = docs, priorDocs = docs.filter(!d2(col("doc_id"))),
@@ -5517,9 +5411,9 @@ object ExtQueries {
       drainStepCache()
       val docs = Tables.documents(s, d)
       ledgerMaintainStep(v1Artifacts(s, d),
-        docs.filter(isDeltaDoc(col("doc_id"))),
-        Tables.embeddings(s, d).filter(isDeltaDoc(col("vec_id"))),
-        corpus = docs, priorDocs = docs.filter(!isDeltaDoc(col("doc_id"))),
+        docs.filter(isDelta(col("doc_id"))),
+        Tables.embeddings(s, d).filter(isDelta(col("vec_id"))),
+        corpus = docs, priorDocs = docs.filter(!isDelta(col("doc_id"))),
         onPersist = stepOnPersist, bloomDecon = true)
         .ledger.orderBy(col("doc_id"))
     }),
@@ -5621,13 +5515,12 @@ object ExtQueries {
       drainStepCache()
       val docs = Tables.documents(s, d)
       val emb = Tables.embeddings(s, d)
-      val baseDocs = docs.filter(!isDeltaDoc(col("doc_id")))
-      val delta = docs.filter(isDeltaDoc(col("doc_id")))
-      val in = CoreQueries.sharedInputDir(
-        s"graft_q179_in_${CoreQueries.dirToken(d)}") { p =>
+      val baseDocs = docs.filter(!isDelta(col("doc_id")))
+      val delta = docs.filter(isDelta(col("doc_id")))
+      val in = Artifacts.dir("q179_in", s, d) { p =>
         delta.repartition(2).write.mode("overwrite").parquet(p)
       }
-      val dir = CoreQueries.tempQueryDir("graft_q179_sledg_")
+      val dir = Artifacts.tempDir("graft_q179_sledg_")
       val docsRoot = s"$dir/docs"; val bndRoot = s"$dir/bnd"
       val ck = s"$dir/ck"
       val names = Seq("sig", "sigcnt", "shsig", "shcnt", "cellidx",
@@ -5731,12 +5624,11 @@ object ExtQueries {
     //      cadence actually runs ----
     "q177_ledger_append" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      appendMaintainedArtifacts(s,
-        s"graft_appv2_${CoreQueries.dirToken(d)}",
+      appendMaintainedArtifacts(s, "appv2", d,
         v1Artifacts(s, d),
-        docs.filter(isDeltaDoc(col("doc_id"))),
-        Tables.embeddings(s, d).filter(isDeltaDoc(col("vec_id"))),
-        corpus = docs, priorDocs = docs.filter(!isDeltaDoc(col("doc_id"))))
+        docs.filter(isDelta(col("doc_id"))),
+        Tables.embeddings(s, d).filter(isDelta(col("vec_id"))),
+        corpus = docs, priorDocs = docs.filter(!isDelta(col("doc_id"))))
         .ledger.orderBy(col("doc_id"))
     }),
 
@@ -5760,10 +5652,9 @@ object ExtQueries {
     "q165_artifact_versioning" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       val v1 = v1SigArtifact(s, d)
-      val v2Dir = CoreQueries.sharedInputDir(
-        s"graft_q165_sigv2_${CoreQueries.dirToken(d)}") { p =>
+      val v2Dir = Artifacts.dir("q165_sigv2", s, d) { p =>
         v1SigArtifact(s, d).unionByName(
-          Dedup.bandedSignatures(docs.filter(isDeltaDoc(col("doc_id"))),
+          Dedup.bandedSignatures(docs.filter(isDelta(col("doc_id"))),
             "text", "doc_id", k = 8))
           .write.mode("overwrite").parquet(p)
       }
@@ -5933,7 +5824,7 @@ object ExtQueries {
     //      crossJoin); scoring the ingest costs |delta| bigram work ----
     "q193_dsir_ingest" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val occBase = dsirBigrams(docs.filter(!isDeltaDoc(col("doc_id"))))
+      val occBase = dsirBigrams(docs.filter(!isDelta(col("doc_id"))))
       val llr = dsirLlr(occBase)
       val baseW = dsirWeights(occBase.filter(col("source") =!= "src0"), llr)
       val cut = sourceQuantiles(
@@ -5941,7 +5832,7 @@ object ExtQueries {
         Seq(0.8 -> "cut"), valueCol = "log_w")
         .select(col("cut"))
       val deltaW = dsirWeights(
-        dsirBigrams(docs.filter(isDeltaDoc(col("doc_id"))))
+        dsirBigrams(docs.filter(isDelta(col("doc_id"))))
           .filter(col("source") =!= "src0"), llr)
       deltaW.crossJoin(broadcast(cut))
         .select(col("doc_id"), col("n_bigrams"), col("log_w"),
@@ -6122,25 +6013,22 @@ object ExtQueries {
     //      report a full rebuild under the same boundaries lands ----
     "q189_stream_histogram" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val baseDocs = docs.filter(!isDeltaDoc(col("doc_id")))
-      val boundsDir = CoreQueries.sharedInputDir(
-        s"graft_q189_bounds_${CoreQueries.dirToken(d)}") { p =>
+      val baseDocs = docs.filter(!isDelta(col("doc_id")))
+      val boundsDir = Artifacts.dir("q189_bounds", s, d) { p =>
         baseDocs.groupBy(col("source"))
           .agg(min(col("n_chars")).as("lo"), max(col("n_chars")).as("hi"))
           .write.mode("overwrite").parquet(p)
       }
       val bounds = s.read.parquet(boundsDir)
-      val baseSketchDir = CoreQueries.sharedInputDir(
-        s"graft_q189_base_${CoreQueries.dirToken(d)}") { p =>
+      val baseSketchDir = Artifacts.dir("q189_base", s, d) { p =>
         histBinCounts(baseDocs, bounds).write.mode("overwrite").parquet(p)
       }
-      val delta = docs.filter(isDeltaDoc(col("doc_id")))
+      val delta = docs.filter(isDelta(col("doc_id")))
         .select(col("doc_id"), col("source"), col("n_chars"))
-      val in = CoreQueries.sharedInputDir(
-        s"graft_q189_in_${CoreQueries.dirToken(d)}") { p =>
+      val in = Artifacts.dir("q189_in", s, d) { p =>
         delta.repartition(2).write.mode("overwrite").parquet(p)
       }
-      val dir = CoreQueries.tempQueryDir("graft_q189_hist_")
+      val dir = Artifacts.tempDir("graft_q189_hist_")
       val out = s"$dir/out"; val ck = s"$dir/ck"
       val stream = graft.streaming.Streaming.eventsStream(s, in, delta.schema)
       val prevParts = s.conf.get("spark.sql.shuffle.partitions")
@@ -6182,19 +6070,17 @@ object ExtQueries {
       drainStepCache()
       val mg = graft.etl.Aggregators.MisraGries(128)
       val docs = stampedDocs(s, d)
-      val baseDir = CoreQueries.sharedInputDir(
-        s"graft_q190_base_${CoreQueries.dirToken(d)}") { p =>
-        val m = gramStream(docs.filter(!isDeltaDoc(col("doc_id"))))
+      val baseDir = Artifacts.dir("q190_base", s, d) { p =>
+        val m = gramStream(docs.filter(!isDelta(col("doc_id"))))
           .select(col("gh")).as[String].select(mg.toColumn).collect()(0)
         m.toSeq.toDF("gh", "est").write.mode("overwrite").parquet(p)
       }
-      val delta = docs.filter(isDeltaDoc(col("doc_id")))
+      val delta = docs.filter(isDelta(col("doc_id")))
         .select(col("doc_id"), col("text"))
-      val in = CoreQueries.sharedInputDir(
-        s"graft_q190_in_${CoreQueries.dirToken(d)}") { p =>
+      val in = Artifacts.dir("q190_in", s, d) { p =>
         delta.repartition(2).write.mode("overwrite").parquet(p)
       }
-      val dir = CoreQueries.tempQueryDir("graft_q190_hh_")
+      val dir = Artifacts.tempDir("graft_q190_hh_")
       val out = s"$dir/out"; val ck = s"$dir/ck"
       val stream = graft.streaming.Streaming.eventsStream(s, in, delta.schema)
       val prevParts = s.conf.get("spark.sql.shuffle.partitions")
@@ -6252,7 +6138,7 @@ object ExtQueries {
     //      aggregates over the sketch rows ----
     "q191_psi_drift" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val base = docs.filter(!isDeltaDoc(col("doc_id")))
+      val base = docs.filter(!isDelta(col("doc_id")))
       val bounds = base.groupBy(col("source"))
         .agg(min(col("n_chars")).as("lo"), max(col("n_chars")).as("hi"))
       def bins(df: DataFrame) = df.join(broadcast(bounds), Seq("source"))
@@ -6271,7 +6157,7 @@ object ExtQueries {
       spine
         .join(bins(base).withColumnRenamed("cnt", "cb"),
           Seq("source", "bin"), "left")
-        .join(bins(docs.filter(isDeltaDoc(col("doc_id"))))
+        .join(bins(docs.filter(isDelta(col("doc_id"))))
           .withColumnRenamed("cnt", "cd"), Seq("source", "bin"), "left")
         .select(col("source"), col("bin"),
           coalesce(col("cb"), lit(0L)).as("cb"),
@@ -6316,17 +6202,15 @@ object ExtQueries {
 
     "q160_stream_containment" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val baseDocs = docs.filter(!isDeltaDoc(col("doc_id")))
+      val baseDocs = docs.filter(!isDelta(col("doc_id")))
       val baseSig = v1SigArtifact(s, d)
-      val baseCnt = sigCountArtifact(s,
-        s"graft_q95cnt_${CoreQueries.dirToken(d)}", baseSig)
-      val delta = docs.filter(isDeltaDoc(col("doc_id")))
+      val baseCnt = sigCountArtifact(s, "q95cnt", d, baseSig)
+      val delta = docs.filter(isDelta(col("doc_id")))
         .select(col("doc_id"), col("text"))
-      val in = CoreQueries.sharedInputDir(
-        s"graft_q160_in_${(d.hashCode & 0x7fffffff).toHexString}") { p =>
+      val in = Artifacts.dir("q160_in", s, d) { p =>
         delta.repartition(4).write.mode("overwrite").parquet(p)
       }
-      val dir = CoreQueries.tempQueryDir("graft_q160_scont_")
+      val dir = Artifacts.tempDir("graft_q160_scont_")
       val out = s"$dir/out"; val ck = s"$dir/ck"
       val stream = graft.streaming.Streaming.eventsStream(s, in, delta.schema)
       val prevParts = s.conf.get("spark.sql.shuffle.partitions")
@@ -6480,7 +6364,7 @@ object ExtQueries {
     //      per-source keep counts — nothing corpus-proportional ----
     "q198_dsir_drift" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val occBase = dsirBigrams(docs.filter(!isDeltaDoc(col("doc_id"))))
+      val occBase = dsirBigrams(docs.filter(!isDelta(col("doc_id"))))
       val llr = dsirLlr(occBase)
       val baseW = dsirWeights(occBase.filter(col("source") =!= "src0"), llr)
       val cut = sourceQuantiles(
@@ -6488,7 +6372,7 @@ object ExtQueries {
         Seq(0.8 -> "cut"), valueCol = "log_w")
         .select(col("cut"))
       val deltaW = dsirWeights(
-        dsirBigrams(docs.filter(isDeltaDoc(col("doc_id"))))
+        dsirBigrams(docs.filter(isDelta(col("doc_id"))))
           .filter(col("source") =!= "src0"), llr)
       val srcOf = docs.select(col("doc_id"), col("source"))
       def keptBy(w: DataFrame, nCol: String, kCol: String) =
@@ -7034,8 +6918,6 @@ object ExtQueries {
     //      bounded 50-query truth side (q25's design), cell-keyed
     //      candidate joins on both index sides ----
     "q213_index_staleness" -> ((s, d) => {
-      def isDelta(c: Column): Column =
-        substring(md5(c.cast("string")), 1, 1).isin("0", "1", "2")
       val emb = Tables.embeddings(s, d)
       val q = emb.filter(col("vec_id") < 50)
       val truth = Similarity.bruteForceTopK(q, emb, "vec_id", "embedding",
@@ -7086,8 +6968,7 @@ object ExtQueries {
         .select(col("doc_id"), col("source"), col("text"))
       val batchOf = pmod(conv(substring(md5(col("doc_id").cast("string")),
         1, 1), 16, 10).cast("long"), lit(3L))
-      val priorDir = CoreQueries.sharedInputDir(
-        s"graft_q214_prior_${CoreQueries.dirToken(d)}") { p =>
+      val priorDir = Artifacts.dir("q214_prior", s, d) { p =>
         val cnt = docs.groupBy(col("source")).agg(count(lit(1)).as("n_docs"))
         val tot = cnt.agg(sum(col("n_docs")).as("tot"))
         cnt.crossJoin(broadcast(tot))
@@ -7095,12 +6976,11 @@ object ExtQueries {
             (col("n_docs").cast("double") / col("tot")).as("w"))
           .repartition(1).write.mode("overwrite").parquet(p)
       }
-      val in = CoreQueries.sharedInputDir(
-        s"graft_q214_in_${CoreQueries.dirToken(d)}") { p =>
+      val in = Artifacts.dir("q214_in", s, d) { p =>
         writeOrderedBatches(p, Seq(0L, 1L, 2L).map(k =>
           docs.filter(batchOf === k)))
       }
-      val dir = CoreQueries.tempQueryDir("graft_q214_smix_")
+      val dir = Artifacts.tempDir("graft_q214_smix_")
       val wRoot = s"$dir/w"; val mRoot = s"$dir/m"; val ck = s"$dir/ck"
       val stream = graft.streaming.Streaming.eventsStream(s, in, docs.schema)
       val prevParts = s.conf.get("spark.sql.shuffle.partitions")
@@ -7256,13 +7136,13 @@ object ExtQueries {
           size(TA.normWords(col("text"))).cast("long").as("n_tokens"))
         .filter(col("n_tokens") > 0)
       val docs = Tables.documents(s, d)
-      val pb = ffdPack(tok(docs.filter(!isDeltaDoc(col("doc_id")))))
+      val pb = ffdPack(tok(docs.filter(!isDelta(col("doc_id")))))
         .select(col("doc_id"), col("source"), col("seq_id").as("b_seq"),
           col("offset_in_seq").as("b_off"))
       val pf = ffdPack(tok(docs))
         .select(col("doc_id"), col("seq_id").as("f_seq"),
           col("offset_in_seq").as("f_off"))
-      val nd = tok(docs.filter(isDeltaDoc(col("doc_id"))))
+      val nd = tok(docs.filter(isDelta(col("doc_id"))))
         .groupBy(col("source")).agg(count(lit(1)).as("n_delta_docs"))
       pb.join(pf, Seq("doc_id"))
         .groupBy(col("source"))
@@ -7297,10 +7177,10 @@ object ExtQueries {
       // two consumers (the union and the per-source seq offsets) of
       // the base fold — persist so it runs once
       val base = graft.util.Persist(
-        ffdPack(tok(docs.filter(!isDeltaDoc(col("doc_id"))))))
+        ffdPack(tok(docs.filter(!isDelta(col("doc_id"))))))
       val seq0 = base.groupBy(col("source"))
         .agg((max(col("seq_id")) + 1).as("seq0"))
-      val delta = ffdPack(tok(docs.filter(isDeltaDoc(col("doc_id")))))
+      val delta = ffdPack(tok(docs.filter(isDelta(col("doc_id")))))
         .join(seq0, Seq("source"), "left")
         .withColumn("seq_id", col("seq_id") + coalesce(col("seq0"), lit(0L)))
         .drop("seq0")
@@ -7353,7 +7233,7 @@ object ExtQueries {
     //      source-cardinality pivot ----
     "q220_fertility_trigger" -> ((s, d) => {
       val enc = bpeEncoded(s, d).withColumn("side",
-        when(isDeltaDoc(col("doc_id")), lit("delta")).otherwise(lit("base")))
+        when(isDelta(col("doc_id")), lit("delta")).otherwise(lit("base")))
       enc.groupBy(col("source"))
         .agg(sum(when(col("side") === "base", col("n_words"))).as("bw"),
           sum(when(col("side") === "base", col("n_tokens"))).as("bt"),
@@ -7391,11 +7271,11 @@ object ExtQueries {
         .filter(col("n_tokens") > 0)
       val docs = Tables.documents(s, d)
       val base = graft.util.Persist(
-        ffdPack(tok(docs.filter(!isDeltaDoc(col("doc_id"))))))
+        ffdPack(tok(docs.filter(!isDelta(col("doc_id"))))))
       val s1 = base.groupBy(col("source"))
         .agg((max(col("seq_id")) + 1).as("s0"))
       val d1 = graft.util.Persist(
-        ffdPack(tok(docs.filter(isDeltaDoc(col("doc_id")) &&
+        ffdPack(tok(docs.filter(isDelta(col("doc_id")) &&
             isFirstIngest(col("doc_id")))))
           .join(s1, Seq("source"), "left")
           .withColumn("seq_id", col("seq_id") + coalesce(col("s0"), lit(0L)))
@@ -7403,7 +7283,7 @@ object ExtQueries {
       val s2 = base.select(col("source"), col("seq_id"))
         .unionByName(d1.select(col("source"), col("seq_id")))
         .groupBy(col("source")).agg((max(col("seq_id")) + 1).as("s0"))
-      val d2 = ffdPack(tok(docs.filter(isDeltaDoc(col("doc_id")) &&
+      val d2 = ffdPack(tok(docs.filter(isDelta(col("doc_id")) &&
           !isFirstIngest(col("doc_id")))))
         .join(s2, Seq("source"), "left")
         .withColumn("seq_id", col("seq_id") + coalesce(col("s0"), lit(0L)))
@@ -7429,7 +7309,7 @@ object ExtQueries {
     //      threshold broadcasts; phase-cardinality output ----
     "q222_frozen_curriculum" -> ((s, d) => {
       val q = docQuality(s, d)
-        .withColumn("is_delta", isDeltaDoc(col("doc_id")))
+        .withColumn("is_delta", isDelta(col("doc_id")))
       val thB = sourceQuantiles(q.filter(!col("is_delta")),
           Seq(1.0 / 3 -> "t1", 2.0 / 3 -> "t2"),
           keys = Seq.empty, valueCol = "quality_score")
@@ -7475,10 +7355,10 @@ object ExtQueries {
         .filter(col("n_tokens") > 0)
       val docs = Tables.documents(s, d)
       val base = graft.util.Persist(
-        ffdPack(tok(docs.filter(!isDeltaDoc(col("doc_id"))))))
+        ffdPack(tok(docs.filter(!isDelta(col("doc_id"))))))
       val seq0 = base.groupBy(col("source"))
         .agg((max(col("seq_id")) + 1).as("s0"))
-      val delta = ffdPack(tok(docs.filter(isDeltaDoc(col("doc_id")))))
+      val delta = ffdPack(tok(docs.filter(isDelta(col("doc_id")))))
         .join(seq0, Seq("source"), "left")
         .withColumn("seq_id", col("seq_id") + coalesce(col("s0"), lit(0L)))
         .drop("s0")
@@ -7520,11 +7400,10 @@ object ExtQueries {
       import org.apache.spark.sql.expressions.Window
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("source"), col("text"))
-      val in = CoreQueries.sharedInputDir(
-        s"graft_q224_in_${CoreQueries.dirToken(d)}") { p =>
+      val in = Artifacts.dir("q224_in", s, d) { p =>
         docs.repartition(3).write.mode("overwrite").parquet(p)
       }
-      val dir = CoreQueries.tempQueryDir("graft_q224_squota_")
+      val dir = Artifacts.tempDir("graft_q224_squota_")
       val skRoot = s"$dir/sk"; val cntRoot = s"$dir/cnt"; val ck = s"$dir/ck"
       val stream = graft.streaming.Streaming.eventsStream(s, in, docs.schema)
       val prevParts = s.conf.get("spark.sql.shuffle.partitions")
@@ -7588,23 +7467,21 @@ object ExtQueries {
           size(TA.normWords(col("text"))).cast("long").as("n_tokens"))
         .filter(col("n_tokens") > 0)
       val docs = Tables.documents(s, d)
-      val baseDir = CoreQueries.sharedInputDir(
-        s"graft_q225_base_${CoreQueries.dirToken(d)}") { p =>
-        ffdPack(tok(docs.filter(!isDeltaDoc(col("doc_id")))))
+      val baseDir = Artifacts.dir("q225_base", s, d) { p =>
+        ffdPack(tok(docs.filter(!isDelta(col("doc_id")))))
           .write.mode("overwrite").parquet(p)
       }
       val base = s.read.parquet(baseDir)
-      val in = CoreQueries.sharedInputDir(
-        s"graft_q225_in_${CoreQueries.dirToken(d)}") { p =>
+      val in = Artifacts.dir("q225_in", s, d) { p =>
         writeOrderedBatches(p, Seq(
-          docs.filter(isDeltaDoc(col("doc_id")) &&
+          docs.filter(isDelta(col("doc_id")) &&
               isFirstIngest(col("doc_id")))
             .select(col("doc_id"), col("source"), col("text")),
-          docs.filter(isDeltaDoc(col("doc_id")) &&
+          docs.filter(isDelta(col("doc_id")) &&
               !isFirstIngest(col("doc_id")))
             .select(col("doc_id"), col("source"), col("text"))))
       }
-      val dir = CoreQueries.tempQueryDir("graft_q225_spack_")
+      val dir = Artifacts.tempDir("graft_q225_spack_")
       val mRoot = s"$dir/m"; val ck = s"$dir/ck"
       val inSchema = docs.select(col("doc_id"), col("source"), col("text"))
         .schema
@@ -7691,8 +7568,7 @@ object ExtQueries {
     //      stream ≡ batch card ----
     "q227_stream_decon" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val heldDir = CoreQueries.sharedInputDir(
-        s"graft_q227_held_${CoreQueries.dirToken(d)}") { p =>
+      val heldDir = Artifacts.dir("q227_held", s, d) { p =>
         splitGrams(s, d).filter(col("hb") === "0")
           .select(col("gh")).distinct()
           .repartition(1).write.mode("overwrite").parquet(p)
@@ -7701,11 +7577,10 @@ object ExtQueries {
       val train = docs
         .filter(substring(md5(col("doc_id").cast("string")), 1, 1) =!= "0")
         .select(col("doc_id"), col("text"))
-      val in = CoreQueries.sharedInputDir(
-        s"graft_q227_in_${CoreQueries.dirToken(d)}") { p =>
+      val in = Artifacts.dir("q227_in", s, d) { p =>
         train.repartition(4).write.mode("overwrite").parquet(p)
       }
-      val dir = CoreQueries.tempQueryDir("graft_q227_sdecon_")
+      val dir = Artifacts.tempDir("graft_q227_sdecon_")
       val out = s"$dir/out"; val ck = s"$dir/ck"
       val stream = graft.streaming.Streaming.eventsStream(s, in, train.schema)
       val prevParts = s.conf.get("spark.sql.shuffle.partitions")
@@ -7923,7 +7798,7 @@ object ExtQueries {
       def langFrame(df: DataFrame) = df.groupBy(col("lang"))
         .agg(sum(col("nt")).as("n_tokens")).filter(col("n_tokens") > 0)
       val v1 = waterFillAlloc(
-        langFrame(toks.filter(!isDeltaDoc(col("doc_id")))), Seq(3.875))
+        langFrame(toks.filter(!isDelta(col("doc_id")))), Seq(3.875))
       val v2 = waterFillAlloc(langFrame(toks), Seq(3.875))
       val prev = v1.select(col("lang"), col("final_alloc").as("prev_alloc"))
       val r1 = v1.select(lit("v1").as("release"), col("lang"),
@@ -7959,13 +7834,10 @@ object ExtQueries {
     //      invariant that lets the q229 layout serve a 100 TB corpus
     //      that never stops ingesting ----
     "q232_stream_pq_index" -> ((s, d) => {
-      def isDelta(c: Column): Column =
-        substring(md5(c.cast("string")), 1, 1).isin("0", "1", "2")
       val emb = Tables.embeddings(s, d)
       val (coarse, residRows) = ivfPqTrained(s, d, baseOnly = true)
       val cb = codebookMap(residRows)
-      val idxDir = CoreQueries.sharedInputDir(
-        s"graft_q232_idx_${CoreQueries.dirToken(d)}") { p =>
+      val idxDir = Artifacts.dir("q232_idx", s, d) { p =>
         Similarity.ivfPqResidualIndex(emb.filter(!isDelta(col("vec_id"))),
             "vec_id", "embedding", coarse, cb)
           .write.mode("overwrite").parquet(p)
@@ -7973,11 +7845,10 @@ object ExtQueries {
       val baseIdx = s.read.parquet(idxDir)
       val delta = emb.filter(isDelta(col("vec_id")))
         .select(col("vec_id"), col("embedding"))
-      val in = CoreQueries.sharedInputDir(
-        s"graft_q232_in_${(d.hashCode & 0x7fffffff).toHexString}") { p =>
+      val in = Artifacts.dir("q232_in", s, d) { p =>
         delta.repartition(4).write.mode("overwrite").parquet(p)
       }
-      val dir = CoreQueries.tempQueryDir("graft_q232_spq_")
+      val dir = Artifacts.tempDir("graft_q232_spq_")
       val out = s"$dir/out"; val ck = s"$dir/ck"
       val stream = graft.streaming.Streaming.eventsStream(s, in, delta.schema)
       val prevParts = s.conf.get("spark.sql.shuffle.partitions")
@@ -8032,10 +7903,10 @@ object ExtQueries {
         .filter(col("n_tokens") > 0)
       val docs = Tables.documents(s, d)
       val base = graft.util.Persist(
-        ffdPack(tok(docs.filter(!isDeltaDoc(col("doc_id"))))))
+        ffdPack(tok(docs.filter(!isDelta(col("doc_id"))))))
       val seq0 = base.groupBy(col("source"))
         .agg((max(col("seq_id")) + 1).as("seq0"))
-      val delta = ffdPack(tok(docs.filter(isDeltaDoc(col("doc_id")))))
+      val delta = ffdPack(tok(docs.filter(isDelta(col("doc_id")))))
         .join(seq0, Seq("source"), "left")
         .withColumn("seq_id", col("seq_id") + coalesce(col("seq0"), lit(0L)))
         .drop("seq0")
@@ -8106,8 +7977,6 @@ object ExtQueries {
     //      + m LUT lookups per candidate); raw vectors appear solely
     //      in the fenced truth side ----
     "q234_pq_staleness" -> ((s, d) => {
-      def isDelta(c: Column): Column =
-        substring(md5(c.cast("string")), 1, 1).isin("0", "1", "2")
       val emb = Tables.embeddings(s, d)
       val q = emb.filter(col("vec_id") < 50)
       val (coarse, residRows) = ivfPqTrained(s, d, baseOnly = true)
@@ -8402,10 +8271,9 @@ object ExtQueries {
       val (coarse, residRows) = ivfPqTrained(s, d, baseOnly = true)
       val cb = codebookMap(residRows)
       // the SAME released artifact q232 maintains (shared dir)
-      val idxDir = CoreQueries.sharedInputDir(
-        s"graft_q232_idx_${CoreQueries.dirToken(d)}") { p =>
+      val idxDir = Artifacts.dir("q232_idx", s, d) { p =>
         Similarity.ivfPqResidualIndex(
-            emb.filter(!firstHex(col("vec_id")).isin("0", "1", "2")),
+            emb.filter(!isDelta(col("vec_id"))),
             "vec_id", "embedding", coarse, cb)
           .write.mode("overwrite").parquet(p)
       }
@@ -8496,7 +8364,7 @@ object ExtQueries {
     //      through weightedInterleaveRank's DECIMAL-widened closed
     //      form; cursor state = bounded count frames, broadcast ----
     "q241_mixture_append" -> ((s, d) => {
-      val isD = isDeltaDoc(col("doc_id"))
+      val isD = isDelta(col("doc_id"))
       // FROZEN v1 artifacts: thresholds + the committed mixture
       val q = docQuality(s, d)
       val th = sourceQuantiles(q.filter(!isD),
@@ -8552,13 +8420,10 @@ object ExtQueries {
     //      encode under the frozen bundle — maintenance ≡ rebuild
     //      with the permutation carried ----
     "q242_stream_opq_index" -> ((s, d) => {
-      def isDelta(c: Column): Column =
-        substring(md5(c.cast("string")), 1, 1).isin("0", "1", "2")
       val emb = Tables.embeddings(s, d)
       val (coarse, perm, cbRows) = ivfPqOpqTrained(s, d)
       val cb = codebookMap(cbRows)
-      val idxDir = CoreQueries.sharedInputDir(
-        s"graft_q242_idx_${CoreQueries.dirToken(d)}") { p =>
+      val idxDir = Artifacts.dir("q242_idx", s, d) { p =>
         Similarity.ivfPqResidualIndexPerm(
             emb.filter(!isDelta(col("vec_id"))),
             "vec_id", "embedding", coarse, cb, perm)
@@ -8567,11 +8432,10 @@ object ExtQueries {
       val baseIdx = s.read.parquet(idxDir)
       val delta = emb.filter(isDelta(col("vec_id")))
         .select(col("vec_id"), col("embedding"))
-      val in = CoreQueries.sharedInputDir(
-        s"graft_q242_in_${(d.hashCode & 0x7fffffff).toHexString}") { p =>
+      val in = Artifacts.dir("q242_in", s, d) { p =>
         delta.repartition(4).write.mode("overwrite").parquet(p)
       }
-      val dir = CoreQueries.tempQueryDir("graft_q242_sopq_")
+      val dir = Artifacts.tempDir("graft_q242_sopq_")
       val out = s"$dir/out"; val ck = s"$dir/ck"
       val stream = graft.streaming.Streaming.eventsStream(s, in, delta.schema)
       val prevParts = s.conf.get("spark.sql.shuffle.partitions")
@@ -8793,8 +8657,6 @@ object ExtQueries {
     //      full replay, and Wave29Spec pins serving-the-artifact ≡
     //      the direct corpus encode path row-for-row ----
     "q246_opq_index_serving" -> ((s, d) => {
-      def isDelta(c: Column): Column =
-        substring(md5(c.cast("string")), 1, 1).isin("0", "1", "2")
       val emb = Tables.embeddings(s, d)
       val q = emb.filter(col("vec_id") < 50)
       val exact = graft.util.Persist(
@@ -8815,8 +8677,7 @@ object ExtQueries {
       // frozen perm bundle, served through the perm LUT path
       val (coarse, perm, cbRows) = ivfPqOpqTrained(s, d)
       val cb = codebookMap(cbRows)
-      val opqDir = CoreQueries.sharedInputDir(
-        s"graft_q242_idx_${CoreQueries.dirToken(d)}") { p =>
+      val opqDir = Artifacts.dir("q242_idx", s, d) { p =>
         Similarity.ivfPqResidualIndexPerm(
             emb.filter(!isDelta(col("vec_id"))),
             "vec_id", "embedding", coarse, cb, perm)
@@ -8831,8 +8692,7 @@ object ExtQueries {
       // through the identity LUT path (q234's maintained side)
       val (iCoarse, iRows) = ivfPqTrained(s, d, baseOnly = true)
       val iCb = codebookMap(iRows)
-      val idDir = CoreQueries.sharedInputDir(
-        s"graft_q232_idx_${CoreQueries.dirToken(d)}") { p =>
+      val idDir = Artifacts.dir("q232_idx", s, d) { p =>
         Similarity.ivfPqResidualIndex(emb.filter(!isDelta(col("vec_id"))),
             "vec_id", "embedding", iCoarse, iCb)
           .write.mode("overwrite").parquet(p)
@@ -8942,14 +8802,11 @@ object ExtQueries {
     //      rerank's recovery is the honest (modest) one; the aniso
     //      rehearsal (q243) carries the engaged-regime proof ----
     "q248_serving_stack" -> ((s, d) => {
-      def isDelta(c: Column): Column =
-        substring(md5(c.cast("string")), 1, 1).isin("0", "1", "2")
       val emb = Tables.embeddings(s, d)
       val q = emb.filter(col("vec_id") < 50)
       val (coarse, perm, cbRows) = ivfPqOpqTrained(s, d)
       val cb = codebookMap(cbRows)
-      val opqDir = CoreQueries.sharedInputDir(
-        s"graft_q242_idx_${CoreQueries.dirToken(d)}") { p =>
+      val opqDir = Artifacts.dir("q242_idx", s, d) { p =>
         Similarity.ivfPqResidualIndexPerm(
             emb.filter(!isDelta(col("vec_id"))),
             "vec_id", "embedding", coarse, cb, perm)
@@ -9002,15 +8859,12 @@ object ExtQueries {
     //      (same md5-'f' rule as the q244 manifest masks, so the two
     //      deletion lifecycles compose across families) ----
     "q249_pq_index_tombstones" -> ((s, d) => {
-      def isDelta(c: Column): Column =
-        substring(md5(c.cast("string")), 1, 1).isin("0", "1", "2")
       def tomb(c: Column): Column =
         substring(md5(c.cast("string")), 1, 1) === "f"
       val emb = Tables.embeddings(s, d)
       val (coarse, residRows) = ivfPqTrained(s, d, baseOnly = true)
       val cb = codebookMap(residRows)
-      val idxDir = CoreQueries.sharedInputDir(
-        s"graft_q232_idx_${CoreQueries.dirToken(d)}") { p =>
+      val idxDir = Artifacts.dir("q232_idx", s, d) { p =>
         Similarity.ivfPqResidualIndex(emb.filter(!isDelta(col("vec_id"))),
             "vec_id", "embedding", coarse, cb)
           .write.mode("overwrite").parquet(p)
@@ -9050,7 +8904,7 @@ object ExtQueries {
     //      persists next to the manifest ----
     "q250_mixture_chain" -> ((s, d) => {
       def hex1(c: Column): Column = substring(md5(c.cast("string")), 1, 1)
-      val isD = isDeltaDoc(col("doc_id"))
+      val isD = isDelta(col("doc_id"))
       // FROZEN v1 artifacts (q241's)
       val q = docQuality(s, d)
       val th = sourceQuantiles(q.filter(!isD),
@@ -9084,7 +8938,7 @@ object ExtQueries {
       // greatest/full-join cursor fold by [[chainedMixtureOrder]]'s
       // argument (Wave32Spec pins it against the inlined old fold)
       chainedMixtureOrder(ph, fill, Seq(
-        ("released", !hex1(col("doc_id")).isin("0", "1", "2")),
+        ("released", !isD),
         ("append1", hex1(col("doc_id")) === "0"),
         ("append2", hex1(col("doc_id")).isin("1", "2"))))
     }),
@@ -9240,8 +9094,7 @@ object ExtQueries {
     * + 3-row argmin.
     */
   private def bandSweepRows(s: SparkSession, d: String): DataFrame = {
-    val dir = CoreQueries.sharedInputDir(
-      s"graft_bandsweep_${CoreQueries.dirToken(d)}") { p =>
+    val dir = Artifacts.dir("bandsweep", s, d) { p =>
       bandSweepRowsCompute(s, d).repartition(1)
         .write.mode("overwrite").parquet(p)
     }
